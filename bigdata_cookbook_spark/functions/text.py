@@ -577,6 +577,9 @@ def repetition_metrics_exprs(
     never an error) — safe to evaluate on any row, so Catalyst
     filter-collapse/predicate-reordering cannot blow it up; still
     filter short rows first for meaningful output.
+
+    This is the expression reference the tests pin to Python; the
+    registry and both pipelines run gopher_repetition.
     """
     out: dict[str, Column] = {}
     # nullif: a row below the length precondition has an empty gram
@@ -592,176 +595,37 @@ def repetition_metrics_exprs(
     return out
 
 
-def _gram_extend(g: Column, toks: Column, m: int) -> Column:
-    """Grams of size m+1 from grams of size m: g'[i] = g[i] + " " +
-    toks[i+m]. One element_at + one concat per position instead of the
-    m+1 of a direct build — the incremental step of the shared n-gram
-    construction. Empty in exactly the cases ngrams_expr is (clamped
-    ascending start list, filtered to the valid count)."""
-    count = F.size(g) - 1
-    starts = F.filter(
-        F.sequence(F.lit(1), F.greatest(count, F.lit(1))),
-        lambda i: i <= count,
-    )
-    return F.transform(
-        starts,
-        lambda i: F.concat(
-            F.element_at(g, i), F.lit(" "), F.element_at(toks, i + F.lit(m))
-        ),
-    )
-
-
-def _gram_double(g: Column, m: int) -> Column:
-    """Grams of size 2m from grams of size m: g'[i] = g[i] + " " +
-    g[i+m] (both halves already built — the doubling shortcut, e.g.
-    10-grams from 5-grams in one step instead of five)."""
-    count = F.size(g) - m
-    starts = F.filter(
-        F.sequence(F.lit(1), F.greatest(count, F.lit(1))),
-        lambda i: i <= count,
-    )
-    return F.transform(
-        starts,
-        lambda i: F.concat(
-            F.element_at(g, i), F.lit(" "), F.element_at(g, i + F.lit(m))
-        ),
-    )
-
-
-def repetition_metrics_struct(
-    toks: Column,
-    top_ns: tuple[int, ...] = (2, 3, 4),
-    dup_ns: tuple[int, ...] = (5, 10),
-) -> Column:
-    """All Gopher repetition metrics as ONE struct expression with
-    SHARED n-gram construction: the gram arrays are built incrementally
-    (2-grams from tokens, each next size by appending one token, and a
-    doubling shortcut when a size is exactly twice an already-built
-    one: 5-grams + 5-grams -> 10-grams), each array and each per-n
-    run-length stat bound exactly once via let_bound lambda variables —
-    so the whole tier costs ~2 string ops per position per size instead
-    of n, and nothing is re-evaluated however Catalyst rewrites the
-    surrounding plan (lambda bindings survive pushdown and
-    project-collapse; see let_bound).
-
-    Metric VALUES are identical to repetition_metrics_exprs (property
-    tested) — this is the same math over the same gram multisets,
-    sharing only construction. Use the struct form in hot paths: bind
-    it with one select and extract fields in the next (cheap
-    GetStructField), or let repetition_keep_all_expr wrap it for
-    filters. repetition_metrics_exprs stays as the simple per-metric
-    form for ad-hoc/one-metric use.
-    """
-    ns = sorted(set(top_ns) | set(dup_ns))
-    if not ns:
-        return F.struct(F.lit(0).alias("__empty"))
-    # binding plan: which sizes to materialize, in order, and how
-    chain: list[tuple[str, int]] = []
-    built: list[int] = []
-    for n in ns:
-        if built and n in built:
-            continue
-        if not built:
-            chain.append(("base", n))
-            built.append(n)
-        elif n % 2 == 0 and n // 2 in built:
-            chain.append(("double", n))
-            built.append(n)
-        else:
-            cur = max(b for b in built if b < n)
-            while cur < n:
-                cur += 1
-                chain.append(("extend", cur))
-                built.append(cur)
-
-    def finish(bound: dict[int, Column]) -> Column:
-        # bind each needed per-n stat struct once, then emit fields
-        needed = ns
-
-        def stats_chain(i: int, stats: dict[int, Column]) -> Column:
-            if i == len(needed):
-                fields = []
-                for n in top_ns:
-                    st = stats[n]
-                    tot = F.nullif(st["tot"], F.lit(0))
-                    fields.append(
-                        F.round(st["best"] / tot, 4).alias(
-                            f"top{n}gram_char_frac"
-                        )
-                    )
-                for n in dup_ns:
-                    st = stats[n]
-                    tot = F.nullif(st["tot"], F.lit(0))
-                    fields.append(
-                        F.round(st["dup"] / tot, 4).alias(
-                            f"dup{n}gram_char_frac"
-                        )
-                    )
-                return F.struct(*fields)
-            n = needed[i]
-            return let_bound(
-                _gram_char_stats(bound[n]),
-                lambda st: stats_chain(i + 1, {**stats, n: st}),
-            )
-
-        return stats_chain(0, {})
-
-    def build(i: int, bound: dict[int, Column]) -> Column:
-        if i == len(chain):
-            return finish(bound)
-        op, n = chain[i]
-        if op == "base":
-            expr = ngrams_expr(toks, n)
-        elif op == "double":
-            expr = _gram_double(bound[n // 2], n // 2)
-        else:
-            expr = _gram_extend(bound[n - 1], toks, n - 1)
-        # NOTE: single-parameter lambda only — F.transform dispatches on
-        # arity, and a second (defaulted) parameter would be bound to
-        # the array INDEX column. n is a frame-local of this recursive
-        # call, so plain closure capture is already correct.
-        return let_bound(expr, lambda g: build(i + 1, {**bound, n: g}))
-
-    return build(0, {})
-
-
 def repetition_stats_kernel(
     toksed,
     ns: tuple[int, ...] = (2, 3, 4, 5, 10),
-    id_col: str = "doc_id",
-    toks_col: str = "toks",
     min_tokens: int | None = None,
 ):
     """Per-document Gopher repetition INTEGER statistics — best / dup /
     tot n-gram character counts per size — as one Arrow-batched
-    ``mapInPandas`` kernel (guide §4.2: hand whole batches to
-    vectorized native code), replacing the interpreted
-    ``array_sort`` + ``F.aggregate`` run-length fold of
-    ``_gram_char_stats`` that dominated the repetition tier's scan
-    (higher-order functions are CodegenFallback; measured ~4x on the
-    registry query at sf1).
+    ``mapInPandas`` kernel: the same numbers the ``array_sort`` +
+    ``F.aggregate`` run-length fold of ``_gram_char_stats`` computes,
+    without the interpreted higher-order functions.
 
-    Returns (id_col, best_{n}, dup_{n}, tot_{n} ... per n) — LONGS
-    only. The metric VALUES (``round(best/tot, 4)`` etc.) must keep
-    being computed in JVM expressions by the caller, so every division
-    and ROUND half-up happens exactly where the expression tier did it
-    and the oracle contract cannot drift: the kernel moves only
-    exact-integer character counting across the boundary
-    (equality of Python ``len``/``str`` with JVM
-    ``length``/``UTF8String`` equality: both count code points and
-    compare code-point sequences; tokens cannot contain the ``" "``
-    join delimiter, so id-tuple equality == joined-gram equality).
+    Takes (doc_id, toks) and returns (doc_id, best_{n}, dup_{n},
+    tot_{n} ... per n) — LONGS only. The metric VALUES
+    (``round(best/tot, 4)`` etc.) are computed in JVM expressions by the
+    caller (gopher_repetition), so every division and ROUND half-up
+    happens where the expression reference does it: the kernel moves
+    only exact-integer character counting across the boundary (Python
+    ``len``/``str`` equality matches JVM ``length``/``UTF8String``
+    equality: both count code points and compare code-point sequences;
+    tokens cannot contain the ``" "`` join delimiter, so id-tuple
+    equality == joined-gram equality).
 
     Algorithm per batch (all NumPy/pandas C paths, no per-row Python):
     tokens of every document are concatenated and factorized to int
     codes once; gram codes are built INCREMENTALLY per size (extend by
     one token, re-ranked per level so products stay in int64; 10-grams
-    double the 5-grams) — the same shared-construction chain as
-    ``repetition_metrics_struct``; per-(doc, gram) counts come from one
-    sorted ``np.unique`` per size over (doc, gram-rank) keys; gram
-    char lengths are prefix-sum differences of token lengths. A row
-    with fewer than n tokens yields (0, 0, 0) for that n — identical
-    to the expression fold over an empty gram array, so the caller's
+    double the 5-grams); per-(doc, gram) counts come from one sorted
+    ``np.unique`` per size over (doc, gram-rank) keys; gram char
+    lengths are prefix-sum differences of token lengths. A row with
+    fewer than n tokens yields (0, 0, 0) for that n — identical to the
+    expression fold over an empty gram array, so the caller's
     ``nullif(tot, 0)`` produces the same NULLs.
 
     ``min_tokens`` drops rows with fewer tokens INSIDE the kernel
@@ -778,14 +642,13 @@ def repetition_stats_kernel(
     from pyspark.sql.types import LongType, StructField, StructType
 
     spark_ns = list(ns)
-    fields = [StructField(id_col, LongType())]
+    fields = [StructField("doc_id", LongType())]
     for n in spark_ns:
         for stat in ("best", "dup", "tot"):
             fields.append(StructField(f"{stat}_{n}", LongType()))
     schema = StructType(fields)
 
-    # binding plan mirroring repetition_metrics_struct: base 2-grams,
-    # extend 3/4/5, double 5 -> 10
+    # gram construction plan: extend by one token up to 5, double 5 -> 10
     sizes = sorted(set(spark_ns))
 
     def run(it):
@@ -803,10 +666,10 @@ def repetition_stats_kernel(
             # winnow-kernel guard rule).
             toks_arrs = [
                 np.asarray(a if a is not None else (), dtype=object)
-                for a in pdf[toks_col].values
+                for a in pdf["toks"].values
             ]
             doc_lens = np.array([len(a) for a in toks_arrs], dtype=np.int64)
-            ids = pdf[id_col].values
+            ids = pdf["doc_id"].values
             if min_tokens is not None:
                 keep_m = doc_lens >= min_tokens
                 if not keep_m.all():
@@ -830,7 +693,7 @@ def repetition_stats_kernel(
                 else toks_arrs[0]
             )
             t = len(flat)
-            out = {id_col: ids}
+            out = {"doc_id": ids}
             if t == 0:
                 z = np.zeros(d, dtype=np.int64)
                 for n in spark_ns:
@@ -926,7 +789,7 @@ def repetition_stats_kernel(
                 out[f"tot_{n}"] = tot
             yield pd.DataFrame(out)
 
-    return toksed.select(id_col, toks_col).mapInPandas(run, schema=schema)
+    return toksed.select("doc_id", "toks").mapInPandas(run, schema=schema)
 
 
 def let_bound(value: Column, body) -> Column:
@@ -945,25 +808,6 @@ def let_bound(value: Column, body) -> Column:
     binding survives pushdown, project-collapse, and any other
     Catalyst rewrite."""
     return F.element_at(F.transform(F.array(value), body), 1)
-
-
-def repetition_keep_all_expr(text: Column) -> Column:
-    """The full Gopher repetition keep-conjunction over raw text as ONE
-    pushdown-safe expression (let_bound tokens + let_bound metric
-    struct with shared gram construction) — the form to use in a
-    FILTER. For metric OUTPUT columns use repetition_metrics_struct
-    bound in one select (or repetition_metrics_exprs for ad-hoc
-    single-metric use)."""
-    names = [f"top{n}gram_char_frac" for n in (2, 3, 4)] + [
-        f"dup{n}gram_char_frac" for n in (5, 10)
-    ]
-    return let_bound(
-        tokens_expr(text),
-        lambda t: let_bound(
-            repetition_metrics_struct(t),
-            lambda m: repetition_keep_expr({f: m[f] for f in names}),
-        ),
-    )
 
 
 def repetition_keep_expr(
@@ -991,6 +835,33 @@ def repetition_keep_expr(
             n = int(name[3 : name.index("gram")])
             keep = keep & (col <= F.lit(dup_t.get(n, min(dup_t.values()))))
     return keep
+
+
+def gopher_repetition(docs):
+    """Gopher repetition rules (Rae et al. 2021 table A1, n-gram half)
+    over a ``(doc_id, text)`` frame: returns ``doc_id``, the
+    top-2/3/4-gram and duplicate-5/10-gram character fractions (the
+    repetition_metrics_exprs definitions) and ``keep``, the
+    repetition_keep_expr conjunction at the paper's thresholds.
+
+    Documents with fewer than 10 tokens (no 10-gram) are dropped. The
+    integer gram statistics come from repetition_stats_kernel; every
+    division and ROUND is a JVM expression, so the values equal the
+    expression reference exactly. Plan shape: a scan plus one Arrow
+    kernel, no shuffle."""
+    toksed = docs.select("doc_id", tokens_expr(F.col("text")).alias("toks"))
+    stats = repetition_stats_kernel(toksed, min_tokens=10)
+    metric = {}
+    for kind, stat, ns in (("top", "best", (2, 3, 4)), ("dup", "dup", (5, 10))):
+        for n in ns:
+            metric[f"{kind}{n}gram_char_frac"] = F.round(
+                F.col(f"{stat}_{n}") / F.nullif(F.col(f"tot_{n}"), F.lit(0)), 4
+            )
+    return stats.select(
+        "doc_id",
+        *[c.alias(k) for k, c in metric.items()],
+        repetition_keep_expr(metric).alias("keep"),
+    )
 
 
 def sentence_budget_chunks_expr(
@@ -1439,7 +1310,8 @@ def script_ratio_exprs(text: Column) -> dict[str, Column]:
     empty/whitespace-only text. Counting is length(text) minus length
     with the range removed — two JVM regex passes per script, zero UDFs,
     and the DuckDB twin (script_ratio_sql) compiles from the same
-    SCRIPT_RANGES table."""
+    SCRIPT_RANGES table. This is the expression reference the tests
+    compare against; callers run script_profile."""
     base = F.length(F.regexp_replace(text, r"\s", ""))
     out: dict[str, Column] = {}
     for name, rng in SCRIPT_RANGES:
@@ -1451,8 +1323,8 @@ def script_ratio_exprs(text: Column) -> dict[str, Column]:
 
 
 #: Java regex \s (what script_ratio_exprs' base count removes) is the
-#: ASCII set [ \t\n\x0B\f\r] — pinned here for the kernel twin. RE2's
-#: \s is the same set, so all three tiers agree.
+#: ASCII set [ \t\n\x0B\f\r] — pinned here for script_profile. RE2's
+#: \s is the same set, so all three forms agree.
 _JAVA_WS_CODEPOINTS: tuple[int, ...] = (9, 10, 11, 12, 13, 32)
 
 
@@ -1471,27 +1343,23 @@ def _parse_char_ranges(rng: str) -> list[tuple[int, int]]:
     return out
 
 
-def script_char_counts_kernel(docs, text_col: str = "__t", id_col: str = "doc_id"):
-    """Per-script character COUNTS (exact longs) as one Arrow-batched
-    ``mapInPandas`` kernel — the §4.2 fast tier under
-    ``script_ratio_exprs``: the expression form runs two JVM regex
-    passes per script (6 ``regexp_replace`` string rebuilds per
-    document just to count characters); here every batch's documents
-    are joined once, decoded to a uint32 codepoint array
-    (``utf-32-le``), and each script is one vectorized range mask +
-    per-document prefix-sum difference. Counting semantics are
-    EXACTLY the expression tier's: ranges come from the same
-    SCRIPT_RANGES table (codepoint-inclusive, the same thing a Java
-    regex class ``[X-Y]`` matches), the base count is non-whitespace
-    with Java's ASCII ``\\s`` set (_JAVA_WS_CODEPOINTS), and both
-    ``length()`` and NumPy count code points. NULL text counts as
-    empty (base 0), which the caller's ``when(base > 0, ...)`` turns
-    into the same NULL ratios the expression tier yields.
+def script_profile(docs):
+    """Per-script character ratios over a ``(doc_id, text)`` frame:
+    returns ``doc_id`` and ``r_<script>`` for every SCRIPT_RANGES entry,
+    with the script_ratio_exprs definitions (chars in range /
+    non-whitespace chars, 4dp, NULL for NULL, empty or whitespace-only
+    text).
 
-    Returns (id_col, c_<script>... , c_base) — ratios and ROUND stay
-    JVM expressions in the caller, so values cannot drift (the gopher
-    kernel's integer-only-boundary rule). Pinned bit-identical to the
-    expression tier by a property test."""
+    The character counting is one Arrow-batched ``mapInPandas`` kernel:
+    every batch's documents are joined once, decoded to a uint32
+    codepoint array (``utf-32-le``), and each script is one vectorized
+    range mask plus a per-document prefix-sum difference. Ranges come
+    from SCRIPT_RANGES (codepoint-inclusive, what a Java regex class
+    ``[X-Y]`` matches), the base count excludes Java's ASCII ``\\s``
+    set (_JAVA_WS_CODEPOINTS), and both ``length()`` and NumPy count
+    code points. Only exact integer counts cross the boundary; the
+    ratios and ROUND are JVM expressions, so the values equal
+    script_ratio_exprs exactly."""
     import numpy as np
     import pandas as pd
 
@@ -1499,7 +1367,7 @@ def script_char_counts_kernel(docs, text_col: str = "__t", id_col: str = "doc_id
 
     ranges = {n: _parse_char_ranges(r) for n, r in SCRIPT_RANGES}
     fields = (
-        [StructField(id_col, LongType())]
+        [StructField("doc_id", LongType())]
         + [StructField(f"c_{n}", LongType()) for n, _ in SCRIPT_RANGES]
         + [StructField("c_base", LongType())]
     )
@@ -1508,9 +1376,9 @@ def script_char_counts_kernel(docs, text_col: str = "__t", id_col: str = "doc_id
 
     def run(it):
         for pdf in it:
-            texts = ["" if t is None else t for t in pdf[text_col].values]
+            texts = ["" if t is None else t for t in pdf["text"].values]
             n = len(texts)
-            out = {id_col: pdf[id_col].values}
+            out = {"doc_id": pdf["doc_id"].values}
             if n == 0:
                 yield pd.DataFrame(
                     {f.name: pd.Series(dtype="int64") for f in fields}
@@ -1542,7 +1410,17 @@ def script_char_counts_kernel(docs, text_col: str = "__t", id_col: str = "doc_id
                 out[f"c_{name}"] = segsum(m)
             yield pd.DataFrame(out)
 
-    return docs.select(id_col, text_col).mapInPandas(run, schema)
+    counts = docs.select("doc_id", "text").mapInPandas(run, schema)
+    return counts.select(
+        "doc_id",
+        *[
+            F.when(
+                F.col("c_base") > 0,
+                F.round(F.col(f"c_{name}") / F.col("c_base"), 4),
+            ).alias(f"r_{name}")
+            for name, _ in SCRIPT_RANGES
+        ],
+    )
 
 
 def script_ratio_sql(col_sql: str) -> dict[str, str]:
@@ -1576,117 +1454,24 @@ def winnow_fingerprints(
     ~2/(w+1) of all k-grams — the rolling-hash fingerprint tier above
     the whole-document md5 (q_doc_fingerprint).
 
+    Tokens are the lower-cased JVM ``\\s+`` split of the trimmed text.
     Hash = md5 hex of the gram STRING, compared lexicographically —
-    deterministic and engine-portable (Spark's md5(encode(utf-8)) and
-    DuckDB's md5() emit identical lowercase hex, so the selection —
-    not just the output format — is reproducible by the SQL oracle).
+    deterministic and engine-portable (Spark's md5(encode(utf-8)),
+    Python's hashlib and DuckDB's md5() agree, and hex order == digest
+    byte order, so the SQL oracle reproduces the selection itself).
 
-    Documents with fewer than k tokens emit no fingerprints; documents
-    with fewer than k + w - 1 tokens form one window over all their
-    grams (one fingerprint). Output: (id_col, gram), distinct.
+    NULL and blank documents and documents with fewer than k tokens
+    emit no fingerprints; documents with fewer than k + w - 1 tokens
+    form one window over all their grams (one fingerprint). Output:
+    (id_col, gram), distinct per document (``id_col`` must be unique
+    per row).
 
-    Plan shape: ONE projection built from nested let_bound bindings
-    (tokens, grams, hashes each bound as a lambda variable — a plain
-    aliased-select chain is NOT safe here: CollapseProject/pushdown
-    re-inline the defining transform into every element_at reference,
-    turning the O(n_grams * w) selection into an exponential
-    re-evaluation; first cut of this function hung for minutes on 50
-    x 50-token docs) + one explode + one distinct. The ONLY exchange
-    is the final distinct; no UDF, no shuffle keyed by gram until the
-    caller joins fingerprints across documents.
+    Plan shape: the JVM split feeds one Arrow-batched ``mapInPandas``
+    kernel — one md5 per gram plus vectorized NumPy window minima over
+    (digest-hi, digest-lo, -pos). Each document's grams live in one
+    batch, so (id, gram) pairs are deduplicated inside the kernel and
+    the plan has no exchange.
     """
-    from pyspark.sql import functions as F
-
-    if k < 1 or w < 1:
-        raise ValueError(f"k and w must be >= 1, got k={k}, w={w}")
-
-    def windows(g: Column, h: Column) -> Column:
-        # argmin hash per window, rightmost tie -> min of struct(hash
-        # asc, NEGATED position asc == position desc, gram); short docs
-        # (n_grams < w) collapse to one window whose out-of-range
-        # lookups clamp to the last gram (duplicate candidates never
-        # change an argmin)
-        n_win = F.greatest(F.size(g) - (w - 1), F.lit(1))
-        return F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), n_win),
-                lambda s: F.array_min(
-                    F.transform(
-                        F.sequence(F.lit(0), F.lit(w - 1)),
-                        lambda j: F.struct(
-                            F.element_at(h, F.least(s + j, F.size(h))).alias(
-                                "h"
-                            ),
-                            (-F.least(s + j, F.size(h))).alias("np"),
-                            F.element_at(g, F.least(s + j, F.size(g))).alias(
-                                "g"
-                            ),
-                        ),
-                    )
-                )["g"],
-            )
-        )
-
-    def selected(t: Column) -> Column:
-        grams = F.transform(
-            F.sequence(F.lit(1), F.size(t) - (k - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(t, i + F.lit(j)) for j in range(k)]
-            ),
-        )
-        return let_bound(
-            grams,
-            lambda g: let_bound(
-                F.transform(g, lambda x: F.md5(F.encode(x, "UTF-8"))),
-                lambda h: windows(g, h),
-            ),
-        )
-
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    staged = (
-        docs.where(
-            F.col(text_col).isNotNull() & (F.length(F.trim(F.col(text_col))) > 0)
-        )
-        .select(F.col(id_col), toks.alias("__t"))
-        .where(F.size("__t") >= k)
-    )
-    return (
-        staged.select(
-            id_col,
-            F.explode(let_bound(F.col("__t"), selected)).alias("gram"),
-        )
-        .distinct()
-    )
-
-
-def winnow_fingerprints_kernel(
-    docs,
-    k: int = 5,
-    w: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
-    """Arrow-batched twin of ``winnow_fingerprints`` — identical output
-    rows (pytest-pinned), built per guide §4.2: the expression tier's
-    window-argmin runs O(n_grams x w) interpreted struct comparisons
-    per document (HOFs are CodegenFallback); here the per-batch loop is
-    one md5 per gram (hashlib — the same digest the JVM computes, and
-    hex order == digest byte order, so comparisons agree) plus
-    vectorized NumPy window minima over (digest-hi, digest-lo, -pos)
-    with the same rightmost-tie and short-doc clamp rules.
-
-    Tokenization stays the JVM split (identical to the expression
-    tier); the kernel receives the token arrays. The expression tier
-    ends in a ``distinct()`` over (id, gram) STRINGS, so selected
-    positions are not enough: the same k-gram occurring at two
-    positions >= w apart in one doc can win two windows, and both
-    selections name the same output row. The kernel therefore dedupes
-    (id, gram-string) pairs per batch — sound because each doc's
-    grams all derive from one input row and hence live in one batch —
-    and the output needs no Spark ``distinct()`` exchange: one scan,
-    zero shuffles. (Parity with the global distinct() additionally
-    assumes ``id_col`` is unique per row, which every caller
-    guarantees.)"""
     from hashlib import md5 as _md5
 
     import numpy as np
@@ -1713,11 +1498,11 @@ def winnow_fingerprints_kernel(
             grams: list[str] = []
             gl = np.zeros(len(toks_arrs), dtype=np.int64)
             for di, arr in enumerate(toks_arrs):
-                # short/blank/null docs emit no grams — the in-kernel
-                # twin of the expression tier's size(toks) >= k filter
-                # (kept out of the JVM plan so pushdown cannot run the
-                # split twice, the gopher-kernel rule)
-                if arr is None:
+                # NULL text, blank text (its split is [""]) and docs
+                # shorter than k emit no grams. The length test stays in
+                # the kernel: a JVM size() filter would be pushed below
+                # the projection and run the split twice.
+                if arr is None or (len(arr) == 1 and arr[0] == ""):
                     continue
                 t = list(arr)
                 n = len(t) - k + 1
@@ -1744,7 +1529,6 @@ def winnow_fingerprints_kernel(
             nw = np.where(gl > 0, np.maximum(gl - (w - 1), 1), 0)
             total_w = int(nw.sum())
             # global window start gram-index per window
-            doc_of_w = np.repeat(np.arange(len(gl)), nw)
             wstart_base = np.repeat(gstart[:-1], nw)
             woff = np.arange(total_w) - np.repeat(
                 np.concatenate(([0], np.cumsum(nw)))[:-1], nw
@@ -1775,9 +1559,8 @@ def winnow_fingerprints_kernel(
                     "gram": [grams[i] for i in sel],
                 }
             )
-            # distinct (id, gram) by STRING, matching the expression
-            # tier's distinct(): two selected positions can carry the
-            # same gram text when it repeats >= w apart in a doc
+            # distinct (id, gram) by STRING: two selected positions can
+            # carry the same gram text when it repeats >= w apart in a doc
             yield out.drop_duplicates(ignore_index=True)
 
     toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bigdata_cookbook_spark.functions.text import quality_exprs
+from bigdata_cookbook_spark.functions.text import gopher_repetition, quality_exprs
 from bigdata_cookbook_spark.operators.dedup import ngram_jaccard_pairs
 from bigdata_cookbook_spark.sources.testdata import spread_for_cpu_bound
 
@@ -51,11 +51,11 @@ def corpus_clean(
     persist the shared prefix; see workflows.pretraining_pipeline).
 
     ``repetition_filter=True`` additionally applies the Gopher n-gram
-    repetition rules (functions/text.repetition_metrics_exprs) inside
-    the quality stage — failures land in dropped_quality alongside the
-    basic-quality drops. Requires ``min_tokens >= 10`` (the repetition
-    expressions' documented precondition; the prior length filter is
-    what guarantees it), enforced with a ValueError.
+    repetition rules (functions/text.gopher_repetition) to the
+    quality-passing documents — failures land in dropped_quality
+    alongside the basic-quality drops. Requires ``min_tokens >= 10``
+    (every rule needs a 10-gram; the prior length filter is what
+    guarantees one), enforced with a ValueError.
 
     kept = quality-passing, exact-canonical, near-dup-free documents —
     and, with an eval benchmark set supplied, decontaminated: any
@@ -98,14 +98,11 @@ def corpus_clean(
       (tools/lsh_recall.py, BASELINE.md §K): drop recall 0.980 at
       jaccard >= 0.5 and 1.0 at >= 0.7/0.8 with the defaults;
       ``lsh_num_hashes=24`` is the recall knob (1.0 at every
-      threshold, 2x signature cost, verify stage unchanged). At the
-      sf10 capstone scale the exact tier's near-dup pass is the single
-      largest marginal stage (105.6 s of 587 — BASELINE.md §J); this
-      tier is the production answer.
+      threshold, 2x signature cost, verify stage unchanged).
     """
-    # round 11: spread the scan for the quality battery (token split +
-    # stopword fold per document; conditional — a no-op at cluster
-    # scale where file splits provide the parallelism)
+    # spread the scan for the quality battery (token split + stopword
+    # fold per document; a no-op at cluster scale, where file splits
+    # provide the parallelism)
     docs = spread_for_cpu_bound(docs)
     feats = quality_exprs(F.col("text"))
     scored = docs.select(
@@ -127,37 +124,24 @@ def corpus_clean(
     if repetition_filter:
         if min_tokens < 10:
             raise ValueError(
-                "repetition_filter requires min_tokens >= 10 (the "
-                "repetition expressions need size(toks) >= 10, and the "
-                "length filter is what guarantees it)"
+                "repetition_filter requires min_tokens >= 10 (every "
+                "repetition rule needs a 10-gram, and the length filter "
+                "is what guarantees one)"
             )
-        from bigdata_cookbook_spark.functions.text import (
-            repetition_keep_all_expr,
-        )
-
-        # pushdown-safe form: the keep conjunction binds the token
-        # array as a lambda variable (functions/text.let_bound), so
-        # when Catalyst pushes this predicate into the scan it still
-        # evaluates split() once per row — a select-bound column would
-        # be re-inlined at every element_at (measured 28s vs 9s at
-        # 500 docs). Short rows yield NULL/False keep (never an
-        # error), so filter-collapse with quality_ok is safe too.
-        rep_keep = repetition_keep_all_expr(F.col("text"))
+        verdict = gopher_repetition(passed.select("doc_id", "text"))
         dropped_quality = dropped_quality.unionByName(
-            passed.filter(~rep_keep).select("doc_id")
+            verdict.filter(~F.col("keep")).select("doc_id")
         )
-        passed = passed.filter(rep_keep)
+        passed = passed.join(
+            verdict.filter(F.col("keep")).select("doc_id"), "doc_id", "left_semi"
+        )
 
-    # round 11 (guide §3.3, the bm25/tfidf two-consumer fix applied to
-    # the pipeline spine): `passed` feeds the canon groupBy AND the
-    # keeper semi-join, and `exact_kept` feeds the near-dup tier's
-    # shingle index (twice, via the self-join) AND the final anti-join
-    # — without materialization the scan + quality battery + exact
-    # dedup re-execute once per consumer. Two lazy localCheckpoints
-    # truncate the lineage at both fan-out points: measured 5.40 ->
-    # 2.05 s at sf1 (fresh DataFrame per rep, exact tier; the spread
-    # above contributes only jointly with these — A/B'd separately).
-    # Storage trade at 100 TB: two materializations of the survivor
+    # `passed` feeds the canon groupBy AND the keeper semi-join, and
+    # `exact_kept` feeds the near-dup tier's shingle index (twice, via
+    # the self-join) AND the final anti-join — without materialization
+    # the scan + quality battery + exact dedup re-execute once per
+    # consumer. Two lazy localCheckpoints truncate the lineage at both
+    # fan-out points. Storage trade at 100 TB: two materializations of the survivor
     # corpus (MEMORY_AND_DISK); a production run that wants durability
     # instead should stage the survivors through
     # plans/checkpoint.stage_checkpoint — same pattern, parquet-backed.
@@ -200,11 +184,7 @@ def corpus_clean(
         # candidate-doc corpus prune + both join sides) while the
         # accounting pass and the kept/dropped splits each re-trigger
         # it per action. Without this, the banding DAG re-executes
-        # multiplicatively: measured at the sf10 capstone, the
-        # dropped_neardup marginal was 491 s un-checkpointed vs 62-68 s
-        # after; the isolated corpus_clean_lsh scaling row drops from
-        # 46.2 s (lazy DAG, banding re-run per reference) to 27.0 s
-        # first-run / 22.8 s steady (BASELINE.md §K).
+        # once per reference.
         cand = cand.localCheckpoint(eager=False)
         pairs = jaccard_verify_pairs(
             exact_kept, cand, threshold=jaccard_threshold
@@ -229,9 +209,7 @@ def corpus_clean(
         # the pre-decontamination survivor set, exposed so accounting
         # callers (workflows.pretraining_pipeline) can persist it: the
         # contamination drop count otherwise re-executes the whole
-        # quality -> exact -> near-dup lineage, which at sf10 dwarfed
-        # the contamination work itself ~10x in the per-stage wall
-        # attribution (round-10 capstone finding)
+        # quality -> exact -> near-dup lineage
         out["pre_contamination_kept"] = kept
         _contam = bloom_contamination if bloom_decontaminate else contamination_pairs
         contaminated = (
@@ -385,20 +363,16 @@ def char_bigram_perplexity(
     partition before the doc_id shuffle. No UDFs, no driver collect;
     both passes scale linearly at 100 TB.
 
-    Round 12 (§2.2/§3.3): the batch self-scoring composition explodes
-    the corpus ONCE into a per-doc bigram histogram (doc_id, b, k) and
-    materializes that narrow table (lazy localCheckpoint); the count
-    table, the totals AND the per-doc score all derive from it, so the
-    train+score double scan (and the second explode) is gone, and
-    log/division run once per DISTINCT bigram on the vocab-sized
-    broadcast side instead of once per exploded row. Equivalence: the
-    per-doc mean of log-probs is reassociated from sum(lp_i)/n to
+    The batch self-scoring composition explodes the corpus ONCE into a
+    per-doc bigram histogram (doc_id, b, k) and materializes that
+    narrow table (lazy localCheckpoint); the count table, the totals
+    AND the per-doc score all derive from it, so there is no second
+    scan or explode, and log/division run once per DISTINCT bigram on
+    the vocab-sized broadcast side instead of once per exploded row.
+    The per-doc mean of log-probs is reassociated from sum(lp_i)/n to
     sum(k*lp)/sum(k) — identical reals, float reassociation only, at
     the same ulp scale as the engine-vs-oracle difference the ROUND(4)
-    contract already absorbs (DuckDB's AVG order is not pinned either);
-    verified value-identical vs the two-pass form at sf1 and
-    oracle-green at sf0.001/0.01/0.1 and shuffle widths 7/32/64.
-    Measured: 5.30 -> 2.06 s at sf1 (min-of-3 noop, quiet host, 2.6x).
+    contract already absorbs (DuckDB's AVG order is not pinned either).
     The stream-static path (train_char_bigram_lm +
     score_char_bigram_perplexity on a readStream) is untouched — this
     rewrite is the batch composition only, where both passes see the

@@ -49,7 +49,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdata_cookbook_spark.functions.text import quality_exprs
+from bigdata_cookbook_spark.functions.text import gopher_repetition, quality_exprs
 from bigdata_cookbook_spark.operators.dedup import doc_shingles, ngram_jaccard_pairs
 
 def _batch_shingle_index(df: DataFrame, n: int) -> DataFrame:
@@ -253,10 +253,10 @@ def incremental_corpus_clean(
     incremental_lsh_candidates directly — its latest-ingest-wins state
     replacement is the re-ingest-safe tier.
 
-    Round-5 optional stages (mirroring the batch capstone's
-    pretraining_pipeline; both off by default):
+    Optional stages (mirroring the batch capstone's
+    pretraining_pipeline; all off by default):
 
-    - ``paragraph_sep`` (round 6, e.g. ``"\\n"``) runs corpus-wide
+    - ``paragraph_sep`` (e.g. ``"\\n"``) runs corpus-wide
       paragraph dedup BEFORE every other stage
       (corpus.paragraph_dedup_incremental vs the append-only
       ``para_state`` of every paragraph ever kept) — structural
@@ -276,7 +276,7 @@ def incremental_corpus_clean(
       pass through (the batch rule). Emits ``dropped_semantic`` and a
       ``new_embeddings`` delta. ``semantic_n_planes`` is pinned for
       the state's lifetime — bucket ids must be stable across batches.
-    - ``dsir_lr`` (round 8) turns on a stateless DSIR gate right after
+    - ``dsir_lr`` turns on a stateless DSIR gate right after
       the line corrections: the model is fit OFFLINE on a reference
       snapshot (selection.dsir_logratio_table -> collect_logratio — a
       stream cannot see the full raw distribution) and passed in as
@@ -300,20 +300,15 @@ def incremental_corpus_clean(
         # whose kept text falls under half the original drop whole,
         # booked as dropped_line_filter. No state, no delta.
         lf = line_filter_exprs(F.col("text"))
-        # Round 12 (guide §3.3 — the batch capstone's spine-checkpoint
-        # fix ported to the incremental tier): this function returns
-        # ~15 frames that the foreachBatch sink consumes as SEPARATE
-        # actions (9 parquet writes + the drop-log union), and with a
-        # fully lazy chain every action re-executed the WHOLE stage
-        # chain from the batch scan — the same plan multiplication the
-        # round-11 batch fix closed (142 -> 42 s at the sf10 capstone).
-        # Lazy localCheckpoints at every fan-out node below make the
-        # chain execute once per batch; each frame is batch-sized
+        # This function returns ~15 frames that the foreachBatch sink
+        # consumes as SEPARATE actions (9 parquet writes + the drop-log
+        # union); with a fully lazy chain every action would re-execute
+        # the WHOLE stage chain from the batch scan. Lazy
+        # localCheckpoints at every fan-out node below make the chain
+        # execute once per batch; each frame is batch-sized
         # (MEMORY_AND_DISK), freed when the micro-batch's DataFrames
-        # are dropped. Parity with the batch pipeline is value-exact
-        # (materialization changes no rows) and stays pinned by the
-        # streaming-parity suite. Measured on the 3-batch all-stages-on
-        # example (sf0.001): see OPTIMIZATION_r12.md.
+        # are dropped. Materialization changes no rows, so parity with
+        # the batch pipeline stays pinned by the streaming-parity suite.
         staged = batch_docs.select(
             "doc_id",
             lf["text_clean"].alias("__clean"),
@@ -442,23 +437,18 @@ def incremental_corpus_clean(
     dropped_quality = scored.filter(~quality_ok).select("doc_id")
 
     if repetition_filter:
-        # mirror of corpus_clean's optional second quality stage (same
-        # precondition contract; the metrics are stateless projections,
-        # so the streaming twin needs no state table for this rule)
+        # corpus_clean's repetition stage, same precondition; the rules
+        # are per-document, so the streaming form needs no state table
         if min_tokens < 10:
             raise ValueError(
                 "repetition_filter requires min_tokens >= 10"
             )
-        from bigdata_cookbook_spark.functions.text import (
-            repetition_keep_all_expr,
-        )
-
-        rep_keep = repetition_keep_all_expr(F.col("text"))
-        # stage the verdict column so the gram-stats battery runs once,
+        verdict = gopher_repetition(passed.select("doc_id", "text"))
+        # stage the verdict column so the gram-stats kernel runs once,
         # not once per side of the keep/drop split (§3.3 + §2.3)
-        rep_staged = passed.withColumn("__rep", rep_keep).localCheckpoint(
-            eager=False
-        )
+        rep_staged = passed.join(
+            verdict.select("doc_id", F.col("keep").alias("__rep")), "doc_id"
+        ).localCheckpoint(eager=False)
         dropped_quality = dropped_quality.unionByName(
             rep_staged.filter(~F.col("__rep")).select("doc_id")
         )
@@ -489,8 +479,8 @@ def incremental_corpus_clean(
     # chain (~|tokens| rows per doc) and its two consumers recompute it
     # as a pure projection explode off the checkpointed exact_kept — so
     # it is deliberately NOT checkpointed: storing it costs more block
-    # serialization than the shuffle-free recompute (measured at the
-    # sf10 capstone; §3.3's trade works the other way here)
+    # serialization than the shuffle-free recompute (§3.3's trade works
+    # the other way here)
     batch_idx = _batch_shingle_index(exact_kept, ngram_n)
     new_buckets = None
     if near_dup == "lsh":

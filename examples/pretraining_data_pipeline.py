@@ -58,7 +58,7 @@ def main(spark: SparkSession, out_dir: str, sf_dir: str = "/root/testdata/sf0.00
             F.col("text"),
         ),
     )
-    # round-8 web-ingest shaping: a crawl URL per doc — ~1% on a
+    # web-ingest shaping: a crawl URL per doc — ~1% on a
     # blocklisted domain, doc_id % 19 == 3 collapsing onto shared dup
     # URLs, the rest unique (the synthetic corpus has no URL column)
     docs = docs.withColumn(
@@ -98,12 +98,12 @@ def main(spark: SparkSession, out_dir: str, sf_dir: str = "/root/testdata/sf0.00
         repetition_filter=True,
         embeddings_df=emb,
         semantic_threshold=0.4,
-        # round-6 stages: decontaminate through the map-side Bloom
+        # decontaminate through the map-side Bloom
         # prefilter (bit-identical drop set, benchmark-shaped plan) and
         # keep the top 90% of each source by n_tokens after cleaning
         bloom_decontaminate=True,
         quality_prune_frac=0.9,
-        # round-8 stage: DSIR targeting as the last drop before mixing
+        # DSIR targeting as the last drop before mixing
         dsir_target=dsir_target,
         dsir_keep_k=60,
         dsir_n_buckets=256,
@@ -133,15 +133,15 @@ def main(spark: SparkSession, out_dir: str, sf_dir: str = "/root/testdata/sf0.00
     # corpus-health panels: average token length per source (the
     # quality-profile signal) and the Latin-script ratio per source
     # (script-detection routing signal) — both over the KEPT corpus
-    from bigdata_cookbook_spark.functions.text import script_ratio_exprs
+    from bigdata_cookbook_spark.functions.text import script_profile
 
     kept_src = out["clean"].groupBy("source").agg(
         F.round(F.avg("n_tokens"), 2).alias("avg_tokens")
     ).orderBy("source")
-    latin = script_ratio_exprs(F.col("text"))["latin"]
+    kept_docs = docs.join(out["clean"].select("doc_id"), "doc_id", "left_semi")
     script_src = (
-        docs.join(out["clean"].select("doc_id"), "doc_id", "left_semi")
-        .select("source", latin.alias("r_latin"))
+        script_profile(kept_docs.select("doc_id", "text"))
+        .join(kept_docs.select("doc_id", "source"), "doc_id")
         .groupBy("source")
         .agg(F.round(F.avg("r_latin"), 4).alias("avg_latin_ratio"))
         .orderBy("source")

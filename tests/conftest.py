@@ -11,19 +11,12 @@ from bigdata_cookbook_spark.session import get_spark
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
-# Round 12 (VERDICT r11 item 1): the suite grew past the driver's
-# pytest window (VERIFY_r11 tests_ok:false was a capture TIMEOUT at
-# ~70% with zero failure marks, not a failure). The remedy the verdict
-# ordered: a fast default profile + a full profile, WITHOUT deleting
-# coverage — every test stays collected; the slowest tier (marked
-# @pytest.mark.full: multi-minute end-to-end example pipelines and
-# streaming batteries whose assertions are intrinsically
-# wall-clock-heavy, e.g. run-twice byte-stability and full
-# restart/maintenance cycles) is skipped by default and runs under
-# SPARK_GRAFT_FULL_TESTS=1. The full profile is executed and recorded
-# every round at close-out (OPTIMIZATION_r12.md); the fast profile is
-# what the driver's bounded-window gate runs.
-FULL_PROFILE = bool(os.environ.get("SPARK_GRAFT_FULL_TESTS"))
+# Every test stays collected; the slowest tier (marked @pytest.mark.full:
+# multi-minute end-to-end example pipelines and streaming batteries whose
+# assertions are intrinsically wall-clock-heavy, e.g. run-twice
+# byte-stability and full restart/maintenance cycles) is skipped by
+# default and runs only under SPARK_GRAFT_FULL_TESTS=1.
+FULL_PROFILE = os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1"
 
 
 def pytest_configure(config):

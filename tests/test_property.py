@@ -337,48 +337,6 @@ def test_repetition_metrics_match_python_reference(spark):
         assert got[i]["dup5gram_char_frac"] == ref(toks, 5, "dup"), i
 
 
-def test_repetition_struct_matches_exprs(spark):
-    """repetition_metrics_struct (shared incremental gram construction:
-    extend-by-one + doubling) computes bit-identical values to the
-    per-metric repetition_metrics_exprs form, including short rows
-    (NULL propagation), odd custom ns (gap stepping), and an n present
-    in both top and dup (shared stat binding)."""
-    import random
-
-    from bigdata_cookbook_spark.functions.text import (
-        repetition_metrics_exprs,
-        repetition_metrics_struct,
-        tokens_expr,
-    )
-
-    rng = random.Random(123)
-    vocab = ["aa", "b", "ccc", "dd", "e", "ffff"]
-    rows = [(99, ""), (98, "one"), (97, "x y")]
-    for i in range(50):
-        eff = vocab[: rng.randint(1, len(vocab))]
-        rows.append(
-            (i, " ".join(rng.choice(eff) for _ in range(rng.randint(1, 35))))
-        )
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    toksed = df.select("doc_id", tokens_expr(F.col("text")).alias("toks"))
-    for top_ns, dup_ns in [
-        ((2, 3, 4), (5, 10)),  # default: extend chain + doubling
-        ((2, 7), (3,)),        # gap stepping 3 -> 7 via intermediates
-        ((2,), (2, 4)),        # n shared between top and dup
-    ]:
-        m = repetition_metrics_exprs(F.col("toks"), top_ns, dup_ns)
-        st = repetition_metrics_struct(F.col("toks"), top_ns, dup_ns)
-        names = list(m)
-        got = toksed.select(
-            "doc_id",
-            *[c.alias(f"e_{k}") for k, c in m.items()],
-            *[st[k].alias(f"s_{k}") for k in names],
-        ).collect()
-        for r in got:
-            for k in names:
-                assert r[f"e_{k}"] == r[f"s_{k}"], (r["doc_id"], k)
-
-
 def test_repetition_metrics_null_below_precondition(spark):
     """Short rows yield NULL metrics, never an error — the guarantee
     that makes the expressions safe under Catalyst filter-collapse."""
@@ -410,19 +368,19 @@ def test_repetition_metrics_null_below_precondition(spark):
 
 
 def test_repetition_stats_kernel_matches_expression_tier(spark):
-    """Round-11 optimization pin: the Arrow-batched NumPy kernel
-    (repetition_stats_kernel) must produce bit-identical INTEGER
-    best/dup/tot gram-char stats — and therefore bit-identical rounded
-    metrics — to the JVM expression tier (repetition_metrics_struct)
-    on randomized documents: heavy-dup and all-distinct extremes,
-    multi-char/Unicode tokens, several docs per Arrow batch (counting
-    isolation), and rows shorter than an n (0/0/0 -> NULL parity)."""
+    """The Arrow-batched NumPy kernel (repetition_stats_kernel) must
+    produce bit-identical INTEGER best/dup/tot gram-char stats — and
+    therefore bit-identical rounded metrics — to the expression
+    reference (repetition_metrics_exprs) on randomized documents:
+    heavy-dup and all-distinct extremes, multi-char/Unicode tokens,
+    several docs per Arrow batch (counting isolation), and rows shorter
+    than an n (0/0/0 -> NULL parity)."""
     import random
 
     from pyspark.sql import functions as F
 
     from bigdata_cookbook_spark.functions.text import (
-        repetition_metrics_struct,
+        repetition_metrics_exprs,
         repetition_stats_kernel,
         tokens_expr,
     )
@@ -471,12 +429,12 @@ def test_repetition_stats_kernel_matches_expression_tier(spark):
     )
     kern = {r["doc_id"]: r for r in kern_metrics.collect()}
 
-    st = repetition_metrics_struct(F.col("toks"), top_ns=ns, dup_ns=ns)
+    m = repetition_metrics_exprs(F.col("toks"), top_ns=ns, dup_ns=ns)
     expr = {
         r["doc_id"]: r
-        for r in toksed.select("doc_id", st.alias("__m"))
-        .select("doc_id", *[F.col("__m")[k].alias(k) for k in names])
-        .collect()
+        for r in toksed.select(
+            "doc_id", *[m[k].alias(k) for k in names]
+        ).collect()
     }
     assert set(kern) == set(expr) and len(kern) >= 80
     for i in kern:
@@ -508,18 +466,17 @@ def test_repetition_stats_kernel_matches_expression_tier(spark):
 
 
 def test_script_counts_kernel_matches_expression_tier(spark):
-    """Round-11 optimization pin: script_char_counts_kernel's integer
-    counts, pushed through the SAME when/round JVM expressions the
-    query uses, must equal the regexp_replace expression tier exactly —
-    on mixed-script Unicode, empty, whitespace-only, embedded-NUL and
-    NULL rows, across several docs per Arrow batch."""
+    """script_profile (the Arrow counting kernel + JVM ratio
+    expressions) must equal the regexp_replace expression reference
+    (script_ratio_exprs) exactly — on mixed-script Unicode, empty,
+    whitespace-only, embedded-NUL and NULL rows, across several docs
+    per Arrow batch."""
     import random
 
     from pyspark.sql import functions as F
 
     from bigdata_cookbook_spark.functions.text import (
-        SCRIPT_RANGES,
-        script_char_counts_kernel,
+        script_profile,
         script_ratio_exprs,
     )
 
@@ -551,42 +508,75 @@ def test_script_counts_kernel_matches_expression_tier(spark):
         ).collect()
     }
 
-    counts = script_char_counts_kernel(
-        df.select("doc_id", F.col("text").alias("__t"))
-    )
-    kern = {
-        r["doc_id"]: tuple(r)[1:]
-        for r in counts.select(
-            "doc_id",
-            *[
-                F.when(
-                    F.col("c_base") > 0,
-                    F.round(F.col(f"c_{n}") / F.col("c_base"), 4),
-                )
-                .otherwise(F.lit(None))
-                .alias(f"r_{n}")
-                for n, _ in SCRIPT_RANGES
-            ],
-        ).collect()
-    }
+    kern = {r["doc_id"]: tuple(r)[1:] for r in script_profile(df).collect()}
     assert expr == kern
 
 
+def _winnow_expression_tier(docs, k: int, w: int):
+    """Pure Spark-expression formulation of the winnowing selection
+    rule (no UDF): JVM split + HOF k-grams, md5 per gram, argmin per
+    window as min(struct(hash, -position, gram)) — rightmost tie — with
+    out-of-range lookups clamped to the last gram, then explode +
+    distinct. Kept here as the independent JVM-side reference the
+    Arrow kernel behind winnow_fingerprints is pinned against."""
+    from bigdata_cookbook_spark.functions.text import let_bound
+
+    def windows(g, h):
+        n_win = F.greatest(F.size(g) - (w - 1), F.lit(1))
+        return F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(1), n_win),
+                lambda s: F.array_min(
+                    F.transform(
+                        F.sequence(F.lit(0), F.lit(w - 1)),
+                        lambda j: F.struct(
+                            F.element_at(h, F.least(s + j, F.size(h))).alias("h"),
+                            (-F.least(s + j, F.size(h))).alias("np"),
+                            F.element_at(g, F.least(s + j, F.size(g))).alias("g"),
+                        ),
+                    )
+                )["g"],
+            )
+        )
+
+    def selected(t):
+        grams = F.transform(
+            F.sequence(F.lit(1), F.size(t) - (k - 1)),
+            lambda i: F.concat_ws(
+                " ", *[F.element_at(t, i + F.lit(j)) for j in range(k)]
+            ),
+        )
+        return let_bound(
+            grams,
+            lambda g: let_bound(
+                F.transform(g, lambda x: F.md5(F.encode(x, "UTF-8"))),
+                lambda h: windows(g, h),
+            ),
+        )
+
+    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    staged = (
+        docs.where(
+            F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
+        )
+        .select("doc_id", toks.alias("__t"))
+        .where(F.size("__t") >= k)
+    )
+    return staged.select(
+        "doc_id", F.explode(let_bound(F.col("__t"), selected)).alias("gram")
+    ).distinct()
+
+
 def test_winnow_kernel_matches_expression_tier(spark):
-    """Round-11 optimization pin: winnow_fingerprints_kernel must emit
-    EXACTLY the expression tier's (doc_id, gram) row set — same md5
+    """winnow_fingerprints (the Arrow kernel) must emit EXACTLY the
+    Spark-expression formulation's (doc_id, gram) row set — same md5
     digests, same rightmost-tie argmin, same short-doc clamp — on
     random corpora with heavy gram repetition (tie pressure), docs
     shorter than k (no rows), shorter than k+w-1 (single window),
     blank/whitespace-only and NULL rows, and Unicode tokens."""
     import random
 
-    from pyspark.sql import functions as F
-
-    from bigdata_cookbook_spark.functions.text import (
-        winnow_fingerprints,
-        winnow_fingerprints_kernel,
-    )
+    from bigdata_cookbook_spark.functions.text import winnow_fingerprints
 
     rng = random.Random(555)
     vocab = ["aa", "bb", "cc", "dd", "ALPHA", "héllo", "日本", "x"]
@@ -606,16 +596,15 @@ def test_winnow_kernel_matches_expression_tier(spark):
         (906, " ".join(["dup"] * 20)),      # all grams identical: ties
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    # sorted multisets, not sets: the oracle harness hashes the sorted
-    # multiset of rows, so duplicate (doc_id, gram) emissions (same
-    # gram string winning two windows >= w apart) must be pinned too
+    # sorted multisets, not sets: a duplicate (doc_id, gram) emission
+    # from the kernel must show up as a mismatch
     expr_rows = sorted(
         (r["doc_id"], r["gram"])
-        for r in winnow_fingerprints(df, k=5, w=4).collect()
+        for r in _winnow_expression_tier(df, k=5, w=4).collect()
     )
     kern_rows = sorted(
         (r["doc_id"], r["gram"])
-        for r in winnow_fingerprints_kernel(df, k=5, w=4).collect()
+        for r in winnow_fingerprints(df, k=5, w=4).collect()
     )
     assert kern_rows == expr_rows
     assert any(d == 906 for d, _ in kern_rows)  # tie case produced a row

@@ -440,6 +440,44 @@ def test_corpus_clean_repetition_filter_drops_repetitive_doc(spark):
     assert {r.doc_id for r in strict["dropped_quality"].collect()} == {2}
 
 
+def test_corpus_clean_repetition_drops_equal_gopher_verdicts(spark, sf_dir):
+    """The repetition drops of corpus_clean(repetition_filter=True) are
+    exactly the quality-passing docs whose gopher_repetition ``keep``
+    is false — the pipeline and the registry row share one rule."""
+    from bigdata_cookbook_spark.functions.text import gopher_repetition
+    from bigdata_cookbook_spark.operators.corpus import corpus_clean
+    from bigdata_cookbook_spark.sources.testdata import load_table
+
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang", "source"
+    )
+    planted = spark.createDataFrame(
+        [
+            (10_000_000 + i, f"the {w} sat on the mat " * (3 + i), "en", "s1")
+            for i, w in enumerate(["cat", "dog", "cow", "hen"])
+        ],
+        docs.schema,
+    )
+    docs = docs.unionByName(planted)
+
+    def ids(df):
+        return {r.doc_id for r in df.select("doc_id").collect()}
+
+    base_dropped = ids(corpus_clean(docs)["dropped_quality"])
+    strict = corpus_clean(docs, repetition_filter=True)
+    rep_dropped = ids(strict["dropped_quality"]) - base_dropped
+
+    passing = docs.join(
+        spark.createDataFrame([(i,) for i in base_dropped], "doc_id long"),
+        "doc_id",
+        "left_anti",
+    )
+    verdict = gopher_repetition(passing.select("doc_id", "text"))
+    assert rep_dropped == ids(verdict.filter(~F.col("keep")))
+    assert {10_000_000 + i for i in range(4)} <= rep_dropped
+    assert ids(strict["kept"]) <= ids(verdict.filter(F.col("keep")))
+
+
 def test_pretraining_pipeline_shard_packing(spark, sf_dir):
     """shard_bytes adds a shard_id column packing the training set into
     ~N-byte shards in the training order (shuffle_key, doc_id): shard

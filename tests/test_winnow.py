@@ -14,9 +14,9 @@ from bigdata_cookbook_spark.functions.text import winnow_fingerprints
 K, W = 5, 4
 
 
-def _ref(text: str, k: int = K, w: int = W) -> set[str]:
+def _ref(text: str | None, k: int = K, w: int = W) -> set[str]:
     """Independent Python model of the documented selection rule."""
-    t = text.lower().split()
+    t = (text or "").lower().split()
     if len(t) < k:
         return set()
     grams = [" ".join(t[i : i + k]) for i in range(len(t) - k + 1)]
@@ -31,18 +31,43 @@ def _ref(text: str, k: int = K, w: int = W) -> set[str]:
 
 
 def test_matches_python_reference_random(spark):
+    """Random corpora with heavy gram repetition (tie pressure), several
+    docs per Arrow batch, plus the edge rows: NULL, empty and
+    whitespace-only text, docs shorter than k (no rows) and shorter
+    than k+w-1 (one window), all-identical grams and Unicode tokens."""
     rng = random.Random(13)
     vocab = [f"w{i}" for i in range(30)]
     rows = [
         (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 60))))
         for i in range(80)
     ]
+    uni = ["aa", "bb", "ALPHA", "héllo", "日本", "x"]
+    rows += [
+        (100 + i, " ".join(rng.choice(uni) for _ in range(rng.randint(0, 30))))
+        for i in range(20)
+    ]
+    rows += [
+        (900, "one two three four"),  # < k tokens: no rows
+        (901, "a b c d e"),  # exactly k: one window
+        (902, "a b c d e f g"),  # < k+w-1: still one window
+        (903, ""),
+        (904, "   \t  "),
+        (905, None),
+        (906, " ".join(["dup"] * 20)),  # all grams identical: ties
+    ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got: dict[int, set] = {}
-    for r in winnow_fingerprints(df).collect():
-        got.setdefault(r.doc_id, set()).add(r.gram)
+    got: list[tuple[int, str]] = [
+        (r.doc_id, r.gram) for r in winnow_fingerprints(df).collect()
+    ]
+    # distinct per document: a gram winning two windows >= w apart is
+    # one output row
+    assert len(got) == len(set(got))
+    per: dict[int, set] = {}
+    for d, g in got:
+        per.setdefault(d, set()).add(g)
     for i, text in rows:
-        assert got.get(i, set()) == _ref(text), (i, text)
+        assert per.get(i, set()) == _ref(text), (i, text)
+    assert per[906] == {"dup dup dup dup dup"}
 
 
 def test_shared_substring_guarantee(spark):
@@ -72,6 +97,7 @@ def test_short_docs_and_density(spark):
         (1, "a b c"),              # < k tokens: no fingerprints
         (2, "a b c d e"),          # exactly k: one gram, one window
         (3, " ".join(f"t{i}" for i in range(200))),  # long unique doc
+        (4, "   "),  # blank: its split is [""], one empty token
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     per = {
@@ -81,7 +107,10 @@ def test_short_docs_and_density(spark):
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
-    assert 1 not in per
+    assert 1 not in per and 4 not in per
     assert per[2] == 1
+    # blank text emits nothing even when one token makes a whole gram
+    k1 = {r.doc_id for r in winnow_fingerprints(df, k=1, w=1).collect()}
+    assert k1 == {1, 2, 3}
     # density: expected ~2/(w+1) of 196 grams ≈ 78; generous bounds
     assert 30 <= per[3] <= 140

@@ -384,8 +384,8 @@ def main() -> None:
         # pairs form plus one benchmark-sized aggregate; the left
         # join-back to the eval universe must not shuffle the fact side
         "contamination_report",
-        # round 7: winnowing selection is one nested-let_bound
-        # projection — only the final distinct may exchange
+        # winnowing selection is one Arrow kernel over the token
+        # split — only the CPU-spread repartition may exchange
         "winnow_fingerprints",
         # round 8: URL canonicalization is a zero-exchange regexp
         # projection; the domain cap's two-phase rank must show the
