@@ -2662,16 +2662,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dsir_select_topk": q_dsir_select_topk,
         "dsir_gumbel_sample": q_dsir_gumbel_sample,
         "char_bigram_perplexity": q_char_bigram_perplexity,
-        "domain_mix_temperature": q_domain_mix_temperature,
+        "corpus_clean": q_corpus_clean,
         "contamination_bloom": q_contamination_bloom,
         "shard_pack_documents": q_shard_pack,
         "quality_prune_per_source": q_quality_prune_per_source,
         "neardup_keep_best": q_neardup_keep_best,
         "bpe_pair_counts": q_bpe_pair_counts,
-        "compression_ratio": q_compression_ratio,
+        "semantic_dedup": q_semantic_dedup,
         "sentence_budget_chunks": q_sentence_budget_chunks,
         "cluster_safe_split_docs": q_cluster_safe_split,
-        "line_dedup": q_line_dedup,
+        "semantic_dedup_auto": q_semantic_dedup_auto,
         # -- tail: entries 51+ --
         "quality_score": q_quality_score,
         "risk_level_mapping": q_risk_level_mapping,
@@ -2693,7 +2693,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rolling_hour_avg": q_rolling_hour_avg,
         "rollup_order_volumes": q_rollup_order_volumes,
         "price_percentiles": q_price_percentiles,
-        "semantic_dedup": q_semantic_dedup,
         "sequence_pack": q_sequence_pack,
         "gopher_quality": q_gopher_quality,
         "token_window_chunks": q_token_window_chunks,
@@ -2727,14 +2726,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "similarity_multiquery_rerank": q_similarity_multiquery_rerank,
         "token_pack_buckets": q_token_pack_buckets,
         "sessionize": q_sessionize,
-        "corpus_clean": q_corpus_clean,
         "range_count_events_after_purchase": q_range_count_events_after_purchase,
         "training_shuffle": q_training_shuffle,
         "bpe_token_count": q_bpe_token_count,
         "skew_salted_distinct_users": q_skew_salted_distinct_users,
         "domain_mix_sample": q_domain_mix_sample,
         "ngram_jaccard_capped": q_ngram_jaccard_capped,
-        "semantic_dedup_auto": q_semantic_dedup_auto,
+        "domain_mix_temperature": q_domain_mix_temperature,
+        "compression_ratio": q_compression_ratio,
+        "line_dedup": q_line_dedup,
     }
 
 

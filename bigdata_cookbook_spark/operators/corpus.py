@@ -19,6 +19,8 @@ declared engine semantics, same in the SQL oracle).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -594,128 +596,15 @@ def span_dedup(
     start) so both engines segment identically.
 
     Returns (id, text_deduped, n_spans_kept, n_spans_total) — one row
-    per input document, empty string if every span was removed (the
-    drop-accounting columns are what a pipeline audits).
+    per non-blank input document, empty string if every span was
+    removed (the drop-accounting columns are what a pipeline audits).
 
-    Scale shape: posexplode spans (linear in corpus — spans are
-    NON-overlapping, so the exploded table is ~the corpus size, unlike
-    a shingle explode at ~n x corpus), one shuffle to group identical
-    spans on their 64-bit hash, one shuffle to reassemble per doc.
-    Both keys are high-cardinality and unskewed (span hashes); this is
-    the canonical distributed exact-substring-dedup plan. slice() here
-    is fine — spans don't overlap, total copied work stays linear
-    (contrast shingles_from_tokens, where per-position slice would be
-    quadratic).
+    This is span_dedup_incremental with no state: an incremental run
+    against an empty state is the batch operator.
     """
-    spans, _totals = _span_rows(df, text_col, id_col, span_tokens)
-    # round 11 (guide §3.3): `spans` feeds the keeper groupBy AND the
-    # join's left side, and the totals column needed a third
-    # tokenize pass — materialize the exploded span table once (lazy
-    # localCheckpoint; ~corpus-sized, the same storage trade as
-    # corpus_clean's spine) and derive totals from it instead:
-    # posexplode enumerates idx = 0..n_spans-1, so
-    # n_spans_total == max(idx) + 1 exactly, and both frames cover
-    # exactly the non-blank docs. Measured 2.52 -> 1.71 s at sf1;
-    # the keeper stays the map-side-combined groupBy + join (NOT a
-    # window over the span key) so boilerplate span skew keeps being
-    # absorbed before the exchange.
-    spans = spans.localCheckpoint(eager=False)
-    totals = spans.groupBy(id_col).agg(
-        (F.max("idx") + 1).cast("int").alias("n_spans_total")
-    )
-    # one row per distinct span: its first occurrence. min over a
-    # struct orders lexicographically by (id, idx) — the pinned keeper.
-    # The group key and join condition carry the span TEXT alongside its
-    # xxhash64: hash-only identity silently merges 64-bit collisions
-    # (expected at 100-TB span counts — ~50% birthday odds at 5e9
-    # spans), deleting one colliding span's text corpus-wide. Adding
-    # span equality costs nothing at the shuffle (the hash still
-    # dominates partitioning; distinct colliding spans simply land in
-    # the same partition as separate groups) and makes span identity
-    # exact.
-    keeper = spans.groupBy(
-        F.xxhash64("span").alias("__k"), F.col("span").alias("__s")
-    ).agg(
-        F.min(F.struct(F.col(id_col).alias("i"), F.col("idx").alias("p"))).alias("__first")
-    )
-    kept = (
-        spans.join(
-            keeper,
-            (F.xxhash64(F.col("span")) == F.col("__k"))
-            & (F.col("span") == F.col("__s")),
-        )
-        .where(
-            (F.col(id_col) == F.col("__first.i"))
-            & (F.col("idx") == F.col("__first.p"))
-        )
-        .select(id_col, "idx", "span")
-    )
-    reassembled = _reassemble_spans(kept, id_col)
-    return (
-        totals.join(reassembled, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("text_deduped", F.lit("")).alias("text_deduped"),
-            F.coalesce("n_spans_kept", F.lit(0)).alias("n_spans_kept"),
-            "n_spans_total",
-        )
-    )
-
-
-def _span_rows(
-    df: DataFrame, text_col: str, id_col: str, span_tokens: int
-):
-    """Shared span segmentation for the batch and incremental span-dedup
-    tiers: returns (spans, totals) where spans = one (id, idx, span) row
-    per non-overlapping ``span_tokens``-token window (blank/whitespace
-    docs emit NO rows — token_count_expr maps them to 0; split() alone
-    would yield [""] and a vacuous one-empty-span row) and totals = one
-    (id, n_spans_total) row per non-blank doc."""
-    from bigdata_cookbook_spark.functions.text import (
-        token_count_expr,
-        tokens_expr,
-    )
-
-    toks = tokens_expr(F.col(text_col))
-    base = df.where(token_count_expr(F.col(text_col)) >= 1).select(
-        F.col(id_col), toks.alias("__toks")
-    )
-    n_spans = F.ceil(F.size("__toks") / F.lit(span_tokens)).cast("int")
-    spans = base.select(
-        id_col,
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), n_spans - 1),
-                lambda i: F.concat_ws(
-                    " ",
-                    F.slice(
-                        F.col("__toks"),
-                        i * span_tokens + 1,
-                        span_tokens,
-                    ),
-                ),
-            )
-        ).alias("idx", "span"),
-    )
-    totals = base.select(id_col, n_spans.alias("n_spans_total"))
-    return spans, totals
-
-
-def _reassemble_spans(kept: DataFrame, id_col: str) -> DataFrame:
-    """(id, text_deduped, n_spans_kept) from surviving (id, idx, span)
-    rows — order pinned by idx inside one collect_list aggregate."""
-    return kept.groupBy(id_col).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("idx", "span"))
-                ),
-                lambda s: s["span"],
-            ),
-            " ",
-        ).alias("text_deduped"),
-        F.count("*").cast("int").alias("n_spans_kept"),
-    )
+    return span_dedup_incremental(df, None, text_col, id_col, span_tokens)[
+        "rewritten"
+    ]
 
 
 def span_dedup_incremental(
@@ -725,15 +614,14 @@ def span_dedup_incremental(
     id_col: str = "doc_id",
     span_tokens: int = 5,
 ) -> dict[str, DataFrame]:
-    """Incremental twin of span_dedup for continuous ingest: dedup the
-    BATCH's spans against an append-only state of every span ever kept,
-    without rescanning the corpus.
+    """Span dedup of ``batch_docs`` against an append-only state of
+    every span ever kept — the one implementation behind span_dedup
+    (``span_state=None``) and the streaming span stage.
 
     ``span_state`` is (span_hash, span) — hash for the join key, span
-    text for collision-proof identity (same rule as the batch form).
-    Every batch occurrence of a state-seen span is removed; novel spans
-    keep their first in-batch occurrence (lexicographically smallest
-    (id, idx), the batch rule restricted to the batch). Under
+    text for collision-proof identity. Every batch occurrence of a
+    state-seen span is removed; novel spans keep their first in-batch
+    occurrence (lexicographically smallest (id, idx)). Under
     non-decreasing doc_id ingest the union of per-batch rewrites equals
     span_dedup over the union of batches (parity-tested).
 
@@ -744,14 +632,60 @@ def span_dedup_incremental(
          "new_spans": (span_hash, span) DELTA to append to the state —
                       the batch's novel keeper spans only}
 
-    Scale: identical plan shape to span_dedup (linear explode, one
-    group shuffle, one reassembly shuffle) plus one anti-join of the
-    batch's distinct spans against the state keyed on the span hash —
-    proportional to the batch, not the corpus; lay the state out
-    bucketed on span_hash (plans/layout.write_bucketed) and the
-    state-side shuffle disappears.
+    Scale shape: posexplode spans (linear in the input — spans are
+    NON-overlapping, so the exploded table is ~the corpus size, unlike
+    a shingle explode at ~n x corpus), one shuffle to group identical
+    spans on their 64-bit hash, one shuffle to reassemble per doc.
+    Both keys are high-cardinality and unskewed (span hashes); this is
+    the canonical distributed exact-substring-dedup plan. slice() here
+    is fine — spans don't overlap, total copied work stays linear
+    (contrast shingles_from_tokens, where per-position slice would be
+    quadratic). The keeper is a map-side-combined groupBy + join, NOT a
+    window over the span key, so boilerplate span skew is absorbed
+    before the exchange. The state anti-join is keyed on the span hash
+    and proportional to the batch; lay the state out bucketed on
+    span_hash (plans/layout.write_bucketed) and the state-side shuffle
+    disappears.
     """
-    spans, totals = _span_rows(batch_docs, text_col, id_col, span_tokens)
+    from bigdata_cookbook_spark.functions.text import (
+        token_count_expr,
+        tokens_expr,
+    )
+
+    # blank/whitespace docs emit NO rows: token_count_expr maps them to
+    # 0, where split() alone would yield [""] and a vacuous
+    # one-empty-span row
+    base = batch_docs.where(token_count_expr(F.col(text_col)) >= 1).select(
+        F.col(id_col), tokens_expr(F.col(text_col)).alias("__toks")
+    )
+    n_spans = F.ceil(F.size("__toks") / F.lit(span_tokens)).cast("int")
+    # the exploded span table feeds the keeper groupBy, the join's left
+    # side and the totals — materialize it once (lazy localCheckpoint,
+    # ~input-sized). posexplode enumerates idx = 0..n_spans-1, so
+    # n_spans_total == max(idx) + 1 exactly, with no second tokenize
+    spans = base.select(
+        id_col,
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), n_spans - 1),
+                lambda i: F.concat_ws(
+                    " ",
+                    F.slice(F.col("__toks"), i * span_tokens + 1, span_tokens),
+                ),
+            )
+        ).alias("idx", "span"),
+    ).localCheckpoint(eager=False)
+    totals = spans.groupBy(id_col).agg(
+        (F.max("idx") + 1).cast("int").alias("n_spans_total")
+    )
+    # one row per distinct span: its first occurrence. min over a
+    # struct orders lexicographically by (id, idx) — the pinned keeper.
+    # The group key and join condition carry the span TEXT alongside its
+    # xxhash64: hash-only identity silently merges 64-bit collisions
+    # (expected at 100-TB span counts — ~50% birthday odds at 5e9
+    # spans), deleting one colliding span's text corpus-wide. Span
+    # equality costs nothing at the shuffle (the hash still dominates
+    # partitioning) and makes span identity exact.
     keeper = spans.groupBy(
         F.xxhash64("span").alias("__k"), F.col("span").alias("__s")
     ).agg(
@@ -764,9 +698,8 @@ def span_dedup_incremental(
             F.col("span_hash").alias("__k"), F.col("span").alias("__s")
         )
         keeper = keeper.join(st, ["__k", "__s"], "left_anti")
-    # round 12 (guide §3.3): keeper feeds BOTH the surviving-span join
-    # and the new_spans state delta — materialize once (see the
-    # paragraph twin's note)
+    # keeper feeds both the surviving-span join and the new_spans
+    # delta, which the streaming sink reads as a separate action
     keeper = keeper.localCheckpoint(eager=False)
     kept = (
         spans.join(
@@ -780,7 +713,17 @@ def span_dedup_incremental(
         )
         .select(id_col, "idx", "span")
     )
-    reassembled = _reassemble_spans(kept, id_col)
+    # reassembly order pinned by idx inside one collect_list aggregate
+    reassembled = kept.groupBy(id_col).agg(
+        F.array_join(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("idx", "span"))),
+                lambda s: s["span"],
+            ),
+            " ",
+        ).alias("text_deduped"),
+        F.count("*").cast("int").alias("n_spans_kept"),
+    )
     rewritten = totals.join(reassembled, id_col, "left").select(
         id_col,
         F.coalesce("text_deduped", F.lit("")).alias("text_deduped"),
@@ -817,92 +760,16 @@ def paragraph_dedup(
     function of the paragraph text alone, so a keeper group is never
     split across eligible/ineligible rows.
 
-    Returns one row per input document:
+    Returns one row per input document (NULL text reads as ''):
     (id, text_deduped, n_paras_total, n_paras_kept) — empty string if
     every paragraph was removed; the count columns are the audit trail.
 
-    Scale shape (same keeper pattern as span_dedup, NOT a window):
-    boilerplate paragraphs are precisely the skewed keys this operator
-    exists for (a site footer can occur in millions of documents), and
-    a window over the paragraph key would put every occurrence in one
-    partition. groupBy gets map-side partial aggregation instead — the
-    min-(id,pos) struct collapses per input partition before the
-    shuffle, so a million-occurrence footer ships one candidate row per
-    map task, not a million rows to one reducer. Identity is
-    (xxhash64, text) exactly as in span_dedup: the hash drives
-    partitioning, carrying the text alongside costs nothing and makes
-    64-bit collisions harmless at 100-TB paragraph counts.
+    This is paragraph_dedup_incremental with no state: an incremental
+    run against an empty state is the batch operator.
     """
-    import re as _re
-
-    pat = _re.escape(sep)  # F.split takes a regex; sep is a literal
-    # coalesce NULL text to '': split(NULL) is NULL and posexplode
-    # would emit no rows, silently dropping the doc from the output —
-    # the totals below derive from this exploded table, so every input
-    # doc must contribute at least one paragraph row
-    paras = df.select(
-        F.col(id_col),
-        F.posexplode(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), pat)
-        ).alias("pos", "para"),
-    )
-    # round 11 (guide §3.3, the span_dedup fix): `paras` feeds the
-    # keeper groupBy AND the join's left side, and totals re-split the
-    # corpus a third time — materialize the exploded paragraph table
-    # once and derive totals from it (split() always emits >= 1
-    # element, so every doc appears and n_paras_total == max(pos) + 1
-    # exactly). 3 corpus passes -> 1; measured 1.87 -> 1.58 s at sf1
-    # (paired min-of-3 on a loaded host — the split battery here is
-    # lighter than span_dedup's tokenize, so the structural win is
-    # smaller).
-    paras = paras.localCheckpoint(eager=False)
-    eligible = paras.where(F.length("para") >= min_chars)
-    keeper = eligible.groupBy(
-        F.xxhash64("para").alias("__k"), F.col("para").alias("__p")
-    ).agg(
-        F.min(
-            F.struct(F.col(id_col).alias("i"), F.col("pos").alias("p"))
-        ).alias("__first")
-    )
-    # left join: ineligible paragraphs never match (keeper is built from
-    # eligible rows and eligibility depends only on the text) -> null
-    # __first -> always kept. Eligible rows always match -> kept iff
-    # they ARE the corpus-wide first occurrence.
-    kept = (
-        paras.join(
-            keeper,
-            (F.xxhash64(F.col("para")) == F.col("__k"))
-            & (F.col("para") == F.col("__p")),
-            "left",
-        )
-        .where(
-            F.col("__first").isNull()
-            | (
-                (F.col(id_col) == F.col("__first.i"))
-                & (F.col("pos") == F.col("__first.p"))
-            )
-        )
-        .select(id_col, "pos", "para")
-    )
-    reassembled = kept.groupBy(id_col).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "para"))),
-                lambda s: s["para"],
-            ),
-            sep,
-        ).alias("text_deduped"),
-        F.count("*").cast("int").alias("n_paras_kept"),
-    )
-    totals = paras.groupBy(id_col).agg(
-        (F.max("pos") + 1).cast("int").alias("n_paras_total")
-    )
-    return totals.join(reassembled, id_col, "left").select(
-        id_col,
-        F.coalesce("text_deduped", F.lit("")).alias("text_deduped"),
-        "n_paras_total",
-        F.coalesce("n_paras_kept", F.lit(0)).alias("n_paras_kept"),
-    )
+    return paragraph_dedup_incremental(
+        df, None, text_col, id_col, sep, min_chars
+    )["rewritten"]
 
 
 def paragraph_dedup_incremental(
@@ -913,25 +780,24 @@ def paragraph_dedup_incremental(
     sep: str = "\n",
     min_chars: int = 1,
 ) -> dict[str, DataFrame]:
-    """Incremental twin of paragraph_dedup for continuous ingest: dedup
-    the BATCH's paragraphs against an append-only state of every
-    paragraph ever kept, without rescanning the corpus.
+    """Paragraph dedup of ``batch_docs`` against an append-only state of
+    every paragraph ever kept — the one implementation behind
+    paragraph_dedup (``para_state=None``) and the streaming paragraph
+    stage.
 
     ``para_state`` is (para_hash, para) — hash for the join key, text
-    for collision-proof identity (same rule as the batch form and the
-    span-dedup family). Every batch occurrence of a state-seen
-    paragraph is removed; novel paragraphs keep their first in-batch
-    occurrence. Sub-``min_chars`` paragraphs are formatting: always
-    kept, never entered into the state. Under non-decreasing doc_id
-    ingest the union of per-batch rewrites equals paragraph_dedup over
-    the union of batches (parity-tested).
+    for collision-proof identity (the span-dedup rule). Every batch
+    occurrence of a state-seen paragraph is removed; novel paragraphs
+    keep their first in-batch occurrence. Sub-``min_chars`` paragraphs
+    are formatting: always kept, never entered into the state. Under
+    non-decreasing doc_id ingest the union of per-batch rewrites equals
+    paragraph_dedup over the union of batches (parity-tested).
 
-    NOTE the join-rule difference from the batch form: there, a null
-    keeper match means "ineligible, keep". Here the state anti-join
-    ALSO removes keeper rows (a state-seen paragraph has no surviving
-    keeper), so a null match is ambiguous — eligible rows therefore go
-    through an INNER join to the surviving keepers and ineligible rows
-    are unioned back unconditionally.
+    Join rule: the state anti-join removes keeper rows (a state-seen
+    paragraph has no surviving keeper), so a null keeper match cannot
+    mean "ineligible, keep" — eligible rows go through an INNER join to
+    the surviving keepers and ineligible rows are unioned back
+    unconditionally.
 
     Returns::
 
@@ -941,18 +807,38 @@ def paragraph_dedup_incremental(
          "new_paras": (para_hash, para) DELTA to append to the state —
                       the batch's novel keeper paragraphs only}
 
-    Scale: identical plan shape to paragraph_dedup plus one anti-join
-    of the batch's distinct paragraphs against the state keyed on the
-    hash — proportional to the batch, not the corpus; lay the state out
-    bucketed on para_hash (plans/layout.write_bucketed) and the
-    state-side shuffle disappears.
+    Scale shape (the span_dedup keeper pattern, NOT a window):
+    boilerplate paragraphs are precisely the skewed keys this operator
+    exists for (a site footer can occur in millions of documents), and
+    a window over the paragraph key would put every occurrence in one
+    partition. groupBy gets map-side partial aggregation instead — the
+    min-(id,pos) struct collapses per input partition before the
+    shuffle, so a million-occurrence footer ships one candidate row per
+    map task, not a million rows to one reducer. Identity is
+    (xxhash64, text): the hash drives partitioning, carrying the text
+    alongside makes 64-bit collisions harmless at 100-TB paragraph
+    counts. The state anti-join is keyed on the hash and proportional
+    to the batch; lay the state out bucketed on para_hash
+    (plans/layout.write_bucketed) and the state-side shuffle disappears.
     """
     import re as _re
 
-    pat = _re.escape(sep)
+    pat = _re.escape(sep)  # F.split takes a regex; sep is a literal
+    # coalesce NULL text to '': split(NULL) is NULL and posexplode
+    # would emit no rows, silently dropping the doc from the output —
+    # the totals below derive from this exploded table, so every input
+    # doc must contribute at least one paragraph row. The table feeds
+    # the keeper groupBy, both kept branches and the totals:
+    # materialize it once (split() always emits >= 1 element, so
+    # n_paras_total == max(pos) + 1 exactly)
     paras = batch_docs.select(
         F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), pat)).alias("pos", "para"),
+        F.posexplode(
+            F.split(F.coalesce(F.col(text_col), F.lit("")), pat)
+        ).alias("pos", "para"),
+    ).localCheckpoint(eager=False)
+    totals = paras.groupBy(id_col).agg(
+        (F.max("pos") + 1).cast("int").alias("n_paras_total")
     )
     eligible = paras.where(F.length("para") >= min_chars)
     keeper = eligible.groupBy(
@@ -967,13 +853,10 @@ def paragraph_dedup_incremental(
             F.col("para_hash").alias("__k"), F.col("para").alias("__p")
         )
         keeper = keeper.join(st, ["__k", "__p"], "left_anti")
-    # round 12 (guide §3.3): keeper feeds BOTH the surviving-paragraph
-    # join and the new_paras state delta — without materialization the
-    # batch explode + group + state anti-join re-execute per consumer
-    # (the foreachBatch sink reads rewritten and new_paras as separate
-    # actions)
+    # keeper feeds both the surviving-paragraph join and the new_paras
+    # delta, which the streaming sink reads as a separate action
     keeper = keeper.localCheckpoint(eager=False)
-    kept_eligible = (
+    kept = (
         eligible.join(
             keeper,
             (F.xxhash64(F.col("para")) == F.col("__k"))
@@ -984,9 +867,11 @@ def paragraph_dedup_incremental(
             & (F.col("pos") == F.col("__first.p"))
         )
         .select(id_col, "pos", "para")
-    )
-    kept = kept_eligible.unionByName(
-        paras.where(F.length("para") < min_chars).select(id_col, "pos", "para")
+        .unionByName(
+            paras.where(F.length("para") < min_chars).select(
+                id_col, "pos", "para"
+            )
+        )
     )
     reassembled = kept.groupBy(id_col).agg(
         F.array_join(
@@ -998,10 +883,6 @@ def paragraph_dedup_incremental(
         ).alias("text_deduped"),
         F.count("*").cast("int").alias("n_paras_kept"),
     )
-    totals = batch_docs.select(
-        F.col(id_col),
-        F.size(F.split(F.col(text_col), pat)).alias("n_paras_total"),
-    )
     rewritten = totals.join(reassembled, id_col, "left").select(
         id_col,
         F.coalesce("text_deduped", F.lit("")).alias("text_deduped"),
@@ -1012,6 +893,61 @@ def paragraph_dedup_incremental(
         F.col("__k").alias("para_hash"), F.col("__p").alias("para")
     )
     return {"rewritten": rewritten, "new_paras": new_paras}
+
+
+def join_rewritten_text(docs: DataFrame, rewritten: DataFrame) -> DataFrame:
+    """(doc_id, text, lang, source) with ``text`` replaced by a dedup
+    stage's ``text_deduped`` (span_dedup / paragraph_dedup output).
+
+    Left join + coalesce to '': a doc the stage emptied, or emitted no
+    row for (span_dedup skips blank docs), carries empty text into the
+    quality stage and is dropped + booked there — an inner join would
+    silently lose it and break the accounting-sums-exactly invariant.
+    """
+    return (
+        docs.drop("text")
+        .join(
+            rewritten.select("doc_id", F.col("text_deduped").alias("text")),
+            "doc_id",
+            "left",
+        )
+        .select(
+            "doc_id",
+            F.coalesce("text", F.lit("")).alias("text"),
+            "lang",
+            "source",
+        )
+    )
+
+
+def line_filter_split(
+    docs: DataFrame, stage: Callable[[DataFrame], DataFrame] | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """RefinedWeb line-wise corrections as a pipeline stage: returns
+    (kept, dropped) where kept is (doc_id, text, lang, source) carrying
+    the line-cleaned text and dropped is the doc_ids whose kept text
+    fell under half the original (functions/text.line_filter_exprs).
+
+    Both outputs read one staged (doc_id, clean, keep, lang, source)
+    frame; ``stage`` (e.g. a persist or localCheckpoint) is applied to
+    it so the line battery runs once for both.
+    """
+    from bigdata_cookbook_spark.functions.text import line_filter_exprs
+
+    lf = line_filter_exprs(F.col("text"))
+    staged = docs.select(
+        "doc_id",
+        lf["text_clean"].alias("__clean"),
+        lf["doc_keep"].alias("__keep"),
+        "lang",
+        "source",
+    )
+    if stage is not None:
+        staged = stage(staged)
+    kept = staged.filter(F.col("__keep")).select(
+        "doc_id", F.col("__clean").alias("text"), "lang", "source"
+    )
+    return kept, staged.filter(~F.col("__keep")).select("doc_id")
 
 
 def quality_prune_thresholds(

@@ -283,9 +283,9 @@ def contamination_report(
     Same inverted-index join shape and ``broadcast_eval`` contract as
     contamination_pairs (one corpus-shingle pass, join keyed on
     xxhash64 longs); the extra cost over the pairs form is one
-    map-side-combined aggregate keyed by eval_id (benchmark-sized) and
-    the left join back to the eval universe (broadcast-sized). At
-    100 TB the same df-cap guidance applies to the shingle join.
+    map-side-combined aggregate keyed by eval_id (benchmark-sized) that
+    also takes in the eval universe. At 100 TB the same df-cap guidance
+    applies to the shingle join.
     """
     tr = doc_shingles(corpus, text_col, id_col, n).select(
         F.col("doc_id").alias("train_id"), F.xxhash64("shingle").alias("sh")
@@ -307,26 +307,37 @@ def contamination_report(
         "train_id",
         F.round(F.col("__n_common") / F.col("__n_eval"), 4).alias("__c"),
     )
+    # the eval universe enters the per-eval aggregate as one NULL-score
+    # row per eval doc instead of through a left join back: the union
+    # rides the aggregate's own exchange, where a join would need both
+    # sides co-partitioned (an extra exchange whenever the shingle
+    # spread width differs from the shuffle width). A NULL row counts
+    # toward nothing: no flag, no max, and its struct loses to any
+    # scored struct — an eval doc with no co-shingled corpus doc gets
+    # (0, NULL -> 0.0, NULL).
+    universe = ev_sz.select(
+        "eval_id",
+        F.lit(None).cast(scored.schema["train_id"].dataType).alias("train_id"),
+        F.lit(None).cast("double").alias("__c"),
+    )
     # argmax by (containment desc, train_id asc): max of a struct whose
     # second field is the NEGATED id — larger neg == smaller id
-    agg = scored.groupBy("eval_id").agg(
-        F.count(F.when(F.col("__c") >= threshold, True))
-        .cast("int")
-        .alias("n_flagged"),
-        F.max("__c").alias("max_containment"),
-        F.max(
-            F.struct(
-                F.col("__c").alias("c"),
-                (-F.col("train_id")).alias("neg"),
-                F.col("train_id").alias("tid"),
-            )
-        )["tid"].alias("top_train_id"),
-    )
-    return ev_sz.select("eval_id").join(agg, "eval_id", "left").select(
-        "eval_id",
-        F.coalesce("n_flagged", F.lit(0)).alias("n_flagged"),
-        F.coalesce("max_containment", F.lit(0.0)).alias("max_containment"),
-        "top_train_id",
+    return (
+        scored.unionByName(universe)
+        .groupBy("eval_id")
+        .agg(
+            F.count(F.when(F.col("__c") >= threshold, True))
+            .cast("int")
+            .alias("n_flagged"),
+            F.coalesce(F.max("__c"), F.lit(0.0)).alias("max_containment"),
+            F.max(
+                F.struct(
+                    F.col("__c").alias("c"),
+                    (-F.col("train_id")).alias("neg"),
+                    F.col("train_id").alias("tid"),
+                )
+            )["tid"].alias("top_train_id"),
+        )
     )
 
 
@@ -606,29 +617,39 @@ def minhash_lsh_candidates(
 
     A band's bucket identity is its ``band_size`` signature components
     verbatim — grouped on (band, k0..k{band_size-1}) directly, no
-    re-hash of the band needed. Distinct at the end dedups pairs that
-    collide in multiple bands.
-
-    Round 12 (§2.2/§3): the bucket SELF-JOIN became groupBy(bucket) +
-    in-array positional pair expansion (the cooccurrence_pairs kernel's
-    posexplode+slice form: codegen'd Generates, no interpreted lambdas,
-    no per-row pair-array buffer). The self-join evaluated the MinHash
-    signature battery TWICE — once per alias; ReuseExchange provably
-    did not dedupe the branches (before-plan: two full battery
-    subtrees, 0 ReusedExchange) — and a checkpoint is deliberately NOT
-    used here (headline bench query: a materialized subtree would let
-    warm reps skip the battery the timer must see). One battery pass +
-    one bucket exchange + expansion in place + the pair distinct:
-    sf1 interleaved A/B 2.82/2.10 -> 1.86/1.51 s (~1.4x), pair set
-    verified identical (52,066 pairs). Expansion is bounded by bucket
-    occupancy (sorted ids; doc_b slices strictly after doc_a, so
-    a < b without a filter) — measured at sf1: max bucket 57 docs,
-    p99.9 = 6, so the per-group work is trivially bounded; a
-    pathologically hot bucket costs the same quadratic pair count the
-    self-join also paid.
+    re-hash of the band needed. Pairs come from _bucket_pairs (one
+    signature pass, one bucket exchange, in-array pair expansion, pair
+    distinct). No checkpoint here: this is a headline bench query and a
+    materialized subtree would let warm reps skip the signature battery
+    the timer must see.
     """
     key_cols = [f"k{j}" for j in range(band_size)]
     banded = minhash_band_buckets(df, text_col, id_col, n, num_hashes, band_size)
+    return _bucket_pairs(banded, key_cols)
+
+
+def _bucket_pairs(banded: DataFrame, key_cols: list[str]) -> DataFrame:
+    """(doc_a, doc_b) pairs, doc_a < doc_b, distinct, of docs sharing a
+    (band, key_cols) bucket of a minhash_band_buckets table — the
+    within-set pair rule of minhash_lsh_candidates and
+    incremental_lsh_candidates.
+
+    groupBy(bucket) + positional pair expansion over the sorted id list
+    (posexplode + slice: codegen'd Generates, no interpreted lambdas).
+    Unlike a bucket self-join, the signature lineage is evaluated once.
+    doc_b slices strictly after doc_a in the sorted list, so a < b
+    without a filter (a doc has one row per band, so ids in a bucket
+    are distinct).
+
+    Hot-bucket cost: collect_list holds each bucket's whole id array in
+    a single aggregation buffer that cannot spill, and one task expands
+    the bucket's quadratic pair count. A bucket self-join emits the same
+    pair count as spillable join output, so a degenerate hot bucket
+    (e.g. mass near-identical docs signed before exact dedup) now
+    concentrates its memory on one task instead of degrading gracefully.
+    Both the batch query and the streaming tier carry this profile;
+    exact dedup ahead of banding is what keeps such buckets small.
+    """
     grouped = (
         banded.groupBy("band", *key_cols)
         .agg(F.sort_array(F.collect_list(F.col("doc_id"))).alias("ids"))
@@ -646,64 +667,49 @@ def minhash_lsh_candidates(
     )
 
 
-def jaccard_verify_pairs(
-    df: DataFrame,
-    candidates: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.8,
+def shingle_index(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
 ) -> DataFrame:
-    """Exact word-n-gram Jaccard over a CANDIDATE pair list — the verify
-    stage of the 100 TB near-dup funnel (LSH banding generates
-    candidates, this confirms them; the streaming twin is
-    streaming/pipeline._verify_candidates).
-
-    ``candidates``: (doc_a, doc_b) pairs, doc_a < doc_b. Returns the
-    pairs whose exact Jaccard reaches ``threshold``, with the score —
-    same orientation and columns as ngram_jaccard_pairs, so the two are
-    drop-in sources for a keep-first rule.
-
-    Scale shape: the shingle index is built only for documents that
-    appear in ``candidates`` (left-semi prune before the explode), so
-    the WHOLE stage — index build, n_sh window, and the joins — is
-    bounded by |candidate docs| x per-doc shingle count, never the
-    corpus-wide explode and never the inverted-index sum(df^2) the full
-    self-join pays. The per-pair intersection materializes directly
-    through the (doc_b, sh) equi-join (no |sh_a| x |sh_b| cross
-    product); the n_sh window's group size is one document's shingles,
-    bounded by document length, never corpus size.
+    """(doc_id, shingle, n_sh) inverted-index rows: shingle = xxhash64
+    of each word n-gram (doc_shingles), n_sh = the doc's shingle count
+    denormalized onto every row so a Jaccard needs no size-table join.
+    The streaming tier persists exactly this schema as its shingle
+    state. The n_sh window reuses doc_shingles' doc_id partitioning
+    (sort-only, no shuffle); its group size is one document's shingles.
     """
     from pyspark.sql import Window
 
-    # defensively dedup the pair list: a duplicated (doc_a, doc_b) row
-    # would double its intersection rows through the expand join and
-    # inflate n_common multiplicatively (jaccard could exceed 1 and
-    # false-drop) — minhash_lsh_candidates happens to emit distinct
-    # pairs, but this function's no-false-drops contract must not
-    # depend on the caller's discipline
-    candidates = candidates.select("doc_a", "doc_b").distinct()
-    # prune the corpus to candidate docs BEFORE shingling: when the
-    # banding stage emits few candidates (the normal case), the explode
-    # + n_sh window must not pay a corpus-wide pass
-    cand_ids = (
-        candidates.select(F.col("doc_a").alias(id_col))
-        .union(candidates.select(F.col("doc_b").alias(id_col)))
-        .distinct()
+    sh = doc_shingles(df, text_col, id_col, n).select(
+        "doc_id", F.xxhash64("shingle").alias("shingle")
     )
-    idx = (
-        doc_shingles(df.join(cand_ids, id_col, "left_semi"), text_col, id_col, n)
-        .select(
-            F.col("doc_id"),
-            F.xxhash64("shingle").alias("sh"),
-        )
-        .withColumn("n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
+    return sh.withColumn(
+        "n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
     )
-    a = idx.select(
-        F.col("doc_id").alias("doc_a"), "sh", F.col("n_sh").alias("n_a")
+
+
+def jaccard_verify_on_index(
+    candidates: DataFrame, index: DataFrame, threshold: float
+) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for the ``candidates`` pairs whose exact
+    Jaccard over the shingle_index rows ``index`` reaches ``threshold``
+    (4-dp rounded, the ngram_jaccard_pairs arithmetic). ``candidates``
+    must be distinct: a duplicated pair doubles its intersection rows.
+
+    Each pair expands to doc_a's shingle rows, then equi-joins the b
+    side on BOTH (doc_b, sh) — intersection rows materialize directly,
+    never the per-pair |sh_a| x |sh_b| cross product, and every join
+    keys on candidate doc_ids, so cost is bounded by |candidates| x
+    per-doc shingle count, never the inverted-index sum(df^2).
+    """
+    a = index.select(
+        F.col("doc_id").alias("doc_a"),
+        F.col("shingle").alias("sh"),
+        F.col("n_sh").alias("n_a"),
     )
-    b = idx.select(
-        F.col("doc_id").alias("doc_b"), "sh", F.col("n_sh").alias("n_b")
+    b = index.select(
+        F.col("doc_id").alias("doc_b"),
+        F.col("shingle").alias("sh"),
+        F.col("n_sh").alias("n_b"),
     )
     inter = (
         candidates.join(a, "doc_a")
@@ -719,6 +725,52 @@ def jaccard_verify_pairs(
         ).alias("jaccard"),
     )
     return jac.filter(F.col("jaccard") >= threshold)
+
+
+def jaccard_verify_pairs(
+    df: DataFrame,
+    candidates: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    threshold: float = 0.8,
+) -> DataFrame:
+    """Exact word-n-gram Jaccard over a CANDIDATE pair list — the verify
+    stage of the 100 TB near-dup funnel (LSH banding generates
+    candidates, this confirms them). The streaming tier runs the same
+    shingle_index + jaccard_verify_on_index pair.
+
+    ``candidates``: (doc_a, doc_b) pairs, doc_a < doc_b. Returns the
+    pairs whose exact Jaccard reaches ``threshold``, with the score —
+    same orientation and columns as ngram_jaccard_pairs, so the two are
+    drop-in sources for a keep-first rule.
+
+    Scale shape: the shingle index is built only for documents that
+    appear in ``candidates`` (left-semi prune before the explode), so
+    the WHOLE stage — index build, n_sh window, and the joins — is
+    bounded by |candidate docs| x per-doc shingle count, never the
+    corpus-wide explode and never the inverted-index sum(df^2) the full
+    self-join pays.
+    """
+    # defensively dedup the pair list: a duplicated (doc_a, doc_b) row
+    # would double its intersection rows through the expand join and
+    # inflate n_common multiplicatively (jaccard could exceed 1 and
+    # false-drop) — minhash_lsh_candidates happens to emit distinct
+    # pairs, but this function's no-false-drops contract must not
+    # depend on the caller's discipline
+    candidates = candidates.select("doc_a", "doc_b").distinct()
+    # prune the corpus to candidate docs BEFORE shingling: when the
+    # banding stage emits few candidates (the normal case), the explode
+    # + n_sh window must not pay a corpus-wide pass
+    cand_ids = (
+        candidates.select(F.col("doc_a").alias(id_col))
+        .union(candidates.select(F.col("doc_b").alias(id_col)))
+        .distinct()
+    )
+    idx = shingle_index(
+        df.join(cand_ids, id_col, "left_semi"), text_col, id_col, n
+    )
+    return jaccard_verify_on_index(candidates, idx, threshold)
 
 
 def simhash16(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -829,30 +881,16 @@ def incremental_lsh_candidates(
     on the state side; nothing re-aggregates the accumulated state.
     """
     key_cols = [f"k{j}" for j in range(band_size)]
-    # round 12 (guide §3.3): the banded signatures feed FOUR consumers
-    # (both sides of the within-batch self-join, the state replacement
-    # anti-probe, and the new-state union) — without materialization the
-    # shingle + 12-hash MinHash battery re-executes per consumer. One
-    # lazy localCheckpoint of the batch-sized signature table.
+    # the banded signatures feed the within-batch pairs, the cross
+    # join, the state replacement anti-probe and the new-state union —
+    # one lazy localCheckpoint of the batch-sized signature table keeps
+    # the shingle + MinHash battery from re-executing per consumer
     banded = minhash_band_buckets(
         new_docs, text_col, id_col, n, num_hashes, band_size
     ).localCheckpoint(eager=False)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    key_eq = F.lit(True)
-    for k in key_cols:
-        key_eq = key_eq & (F.col(f"a.{k}") == F.col(f"b.{k}"))
-    within = (
-        a.join(
-            b,
-            key_eq
-            & (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    within = _bucket_pairs(banded, key_cols)
     if seen_buckets is not None:
+        a = banded.alias("a")
         s = seen_buckets.alias("s")
         key_eq_s = F.lit(True)
         for k in key_cols:
@@ -1015,12 +1053,7 @@ def semantic_dedup(
         )
         n_planes = default_srp_planes_for(n_rows)
     planes = srp_planes(dim, n_planes, seed)
-    v = F.col(vec_col).cast("array<double>")
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(v, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        )
-    )
+    v, norm = _vec_norm(vec_col)
     b = df.select(
         F.col(id_col),
         v.alias("__v"),
@@ -1030,6 +1063,67 @@ def semantic_dedup(
     return _bucket_cosine_prune(b, id_col, threshold)
 
 
+def _vec_norm(vec_col: str):
+    """(vec, norm) columns of the semantic dedup tiers: the embedding as
+    array<double> and its L2 norm (a JVM-side fold)."""
+    v = F.col(vec_col).cast("array<double>")
+    norm = F.sqrt(
+        F.aggregate(
+            F.transform(v, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
+        )
+    )
+    return v, norm
+
+
+def _cosine_drop_rule(threshold: float, row_block: int = 1024, col_block: int = 8192):
+    """The semantic dedup keep rule, for both tiers' kernels. Returns
+    ``drops(q_id, q_mat, q_norm, e_id, e_mat, e_norm) -> bool mask``
+    over the q rows: row i drops iff some e row with a SMALLER id has
+    a cosine that reaches ``threshold`` after 4-dp rounding, or a NaN
+    cosine (a zero-norm vector). ``e_id`` must be ascending.
+
+    The test floor(cos * 1e4 + 0.5) * 1e-4 >= threshold replicates
+    F.round(cos, 4) >= threshold: floor(x*1e4 + 0.5) is ROUND_HALF_UP
+    at the only decision boundary when threshold > 0 (it rounds
+    negative halves toward +inf where F.round rounds away from zero,
+    hence the assertion), and NaN dropping matches Spark's
+    NaN-greatest comparison. BLAS summation order can differ from an
+    interpreted fold in the last ulp, so parity with the expression
+    form holds empirically at every 4-dp boundary the oracle corpus
+    exercises. The cosine runs as a blocked GEMM: memory is bounded
+    by row_block x col_block tiles plus the inputs, and e columns at
+    or above a row block's largest id are never computed.
+    """
+    if not threshold > 0:
+        raise ValueError(
+            f"semantic dedup requires threshold > 0 (got {threshold}): "
+            "the floor(x*1e4+0.5) HALF_UP rule diverges from F.round "
+            "for negative halves"
+        )
+
+    def drops(q_id, q_mat, q_norm, e_id, e_mat, e_norm):
+        import numpy as np
+
+        m = len(q_id)
+        drop = np.zeros(m, dtype=bool)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            for s in range(0, m, row_block):
+                e = min(s + row_block, m)
+                c_end = int(np.searchsorted(e_id, q_id[s:e].max()))
+                for cs in range(0, c_end, col_block):
+                    ce = min(cs + col_block, c_end)
+                    sims = (q_mat[s:e] @ e_mat[cs:ce].T) / (
+                        q_norm[s:e, None] * e_norm[None, cs:ce]
+                    )
+                    r4 = np.floor(sims * 10.0**4 + 0.5) * 1e-4
+                    hit = (r4 >= threshold) | np.isnan(sims)
+                    lower = e_id[None, cs:ce] < q_id[s:e, None]
+                    drop[s:e] |= (hit & lower).any(axis=1)
+        return drop
+
+    return drops
+
+
 def _bucket_cosine_prune(
     b: DataFrame,
     id_col: str,
@@ -1037,45 +1131,17 @@ def _bucket_cosine_prune(
     row_block: int = 1024,
     col_block: int = 8192,
 ) -> DataFrame:
-    """Shared within-bucket prune of the semantic dedup tiers: ``b`` is
+    """Within-bucket prune of the batch semantic dedup tiers: ``b`` is
     (id_col, __v array<double>, __n norm, bucket); drop any row whose
     cosine to a LOWER-id row of the same bucket reaches ``threshold``
-    (ALL lower-id rows count, kept or dropped — same rule as before).
+    (ALL lower-id rows count, kept or dropped) under _cosine_drop_rule.
 
-    Round-11 optimization (guide §4.2): one groupBy(bucket) +
-    applyInPandas kernel that runs the within-bucket cosine as a
-    blocked NumPy GEMM and emits the kept (id, bucket) rows directly.
-    The previous expression tier joined the frame to itself on the
-    bucket id and evaluated every pair's dot product through
-    interpreted higher-order functions (zip_with/aggregate are
-    CodegenFallback — similarity.py's measured ~100x penalty), then
-    anti-joined the dropped ids back: 2 exchanges + |bucket|^2 joined
-    rows each carrying two dim-width arrays through the interpreted
-    filter. This plan shuffles each vector ONCE (the bucket exchange),
-    runs the quadratic work in BLAS, and needs no join at all —
-    measured 32.3 s -> 0.7 s at sf1 on the pinned 16-bucket grid
-    (OPTIMIZATION_r11.md). Parallelism and skew are unchanged: the
-    equi-join confined each bucket's pairs to one task too.
-
-    Result parity with the expression tier (oracle-checked): the drop
-    test replicates F.round(dot/(na*nb), 4) >= threshold exactly —
-    floor(x*1e4 + 0.5) is ROUND_HALF_UP at the only decision boundary
-    (threshold > 0), and NaN cosines (zero-norm vectors) drop, matching
-    Spark's NaN-greatest comparison semantics. Kernel memory is bounded
-    by ROW_BLOCK x COL_BLOCK sims tiles plus the bucket's vectors.
-
-    Float-boundary caveat: floor(x*1e4+0.5) rounds negative halves
-    toward +inf (F.round's HALF_UP rounds away from zero), and BLAS
-    summation order can differ from an interpreted fold in the last
-    ulp — parity with the expression tier is therefore guaranteed only
-    for threshold > 0 (asserted below) and holds empirically at every
-    4dp boundary the oracle corpus exercises."""
-    if not threshold > 0:
-        raise ValueError(
-            f"_bucket_cosine_prune requires threshold > 0 (got "
-            f"{threshold}): the floor(x*1e4+0.5) HALF_UP twin diverges "
-            "from F.round for negative halves"
-        )
+    One groupBy(bucket) + applyInPandas kernel runs the rule over each
+    bucket against itself and emits the kept (id, bucket) rows
+    directly: each vector is shuffled ONCE (the bucket exchange), the
+    quadratic work runs in BLAS, and no join is needed. Parallelism
+    and skew are those of a bucket equi-join: one task per bucket."""
+    drops = _cosine_drop_rule(threshold, row_block, col_block)
     from pyspark.sql.types import StructType
 
     out_schema = StructType([b.schema[id_col], b.schema["bucket"]])
@@ -1084,25 +1150,11 @@ def _bucket_cosine_prune(
         import numpy as np
 
         pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
-        m = len(pdf)
-        if m > 1:
+        if len(pdf) > 1:
+            ids = pdf[id_col].to_numpy()
             mat = np.stack(pdf["__v"].to_numpy())
             nrm = pdf["__n"].to_numpy(dtype=np.float64)
-            drop = np.zeros(m, dtype=bool)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                for s in range(1, m, row_block):
-                    e = min(s + row_block, m)
-                    rows = np.arange(s, e)
-                    for cs in range(0, e, col_block):
-                        ce = min(cs + col_block, e)
-                        sims = (mat[s:e] @ mat[cs:ce].T) / (
-                            nrm[s:e, None] * nrm[None, cs:ce]
-                        )
-                        r4 = np.floor(sims * 10.0**4 + 0.5) * 1e-4
-                        hit = (r4 >= threshold) | np.isnan(sims)
-                        mask = np.arange(cs, ce)[None, :] < rows[:, None]
-                        drop[s:e] |= (hit & mask).any(axis=1)
-            pdf = pdf.loc[~drop]
+            pdf = pdf.loc[~drops(ids, mat, nrm, ids, mat, nrm)]
         return pdf[[id_col, "bucket"]]
 
     return b.groupBy("bucket").applyInPandas(prune, schema=out_schema)
@@ -1149,12 +1201,7 @@ def semantic_dedup_kmeans(
     assignments, _ = build_ivf(
         df, nlist=n_clusters, id_col=id_col, emb_col=vec_col, seed=seed
     )
-    v = F.col(vec_col).cast("array<double>")
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(v, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        )
-    )
+    v, norm = _vec_norm(vec_col)
     b = assignments.select(
         F.col(id_col),
         v.alias("__v"),
@@ -1204,28 +1251,15 @@ def semantic_dedup_incremental(
     per-batch cost is |batch| x state bucket occupancy, which n_planes
     bounds; the state is append-only and never re-aggregated.
 
-    Round-12 optimization (guide §4.2, VERDICT r11 item 5 — the Change-1
-    recipe ported to this tier): the dropped-id rule runs as ONE
-    groupBy(bucket) cogroup + applyInPandas kernel — batch rows GEMM'd
-    against the earlier rows of the same bucket in blocked NumPy, the
-    same floor(cos*1e4+0.5) ROUND_HALF_UP twin and NaN-drops rule as
-    _bucket_cosine_prune (threshold > 0 asserted for the same
-    float-boundary reason). The previous form joined batch x earlier on
-    the bucket and evaluated every pair's dot product through
-    interpreted zip_with/aggregate (CodegenFallback, the measured ~100x
-    penalty vs BLAS), then a distinct() exchange over the dropped ids;
-    the kernel shuffles each side once and needs no join or distinct.
-    Result parity with the expression form is pinned by
-    tests/test_streaming_maintenance.py / test_streaming_pipeline.py
-    (union-of-batches == batch semantic_dedup, first-arrival-wins) and
-    the expression-twin property test in tests/test_property.py.
+    The dropped-id rule runs as ONE groupBy(bucket) cogroup +
+    applyInPandas kernel: batch rows against the earlier rows of the
+    same bucket under _cosine_drop_rule (the batch tier's rule). Each
+    side is shuffled once; no join or distinct. Parity with batch
+    semantic_dedup is pinned by tests/test_streaming_maintenance.py and
+    tests/test_streaming_pipeline.py (union-of-batches == batch
+    semantic_dedup, first-arrival-wins, the expression-twin test).
     """
-    if not threshold > 0:
-        raise ValueError(
-            f"semantic_dedup_incremental requires threshold > 0 (got "
-            f"{threshold}): the floor(x*1e4+0.5) HALF_UP twin diverges "
-            "from F.round for negative halves"
-        )
+    drops = _cosine_drop_rule(threshold)
     if dim is None:
         first = batch_emb.select(F.size(vec_col)).first()
         if first is None:
@@ -1239,17 +1273,12 @@ def semantic_dedup_incremental(
             return {"dropped": empty_ids, "new_state": empty_state}
         dim = first[0]
     planes = srp_planes(dim, n_planes, seed)
-    v = F.col(vec_col).cast("array<double>")
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(v, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        )
-    )
-    # round 12 (guide §3.3): b feeds THREE consumers — the cogroup's
-    # batch side, the earlier-side union, and the new_state delta —
-    # and its lineage (the SRP plane battery + norm fold over the
-    # batch) would otherwise re-execute per consumer. One lazy
-    # localCheckpoint of the batch-sized projection.
+    v, norm = _vec_norm(vec_col)
+    # b feeds THREE consumers — the cogroup's batch side, the
+    # earlier-side union, and the new_state delta — and its lineage
+    # (the SRP plane battery + norm fold over the batch) would
+    # otherwise re-execute per consumer. One lazy localCheckpoint of
+    # the batch-sized projection.
     b = batch_emb.select(
         F.col(id_col),
         v.alias("vec"),
@@ -1264,7 +1293,6 @@ def semantic_dedup_incremental(
     from pyspark.sql.types import StructType
 
     out_schema = StructType([b.schema[id_col]])
-    row_block, col_block = 1024, 8192
 
     # Every earlier-side column is ALIASED (fresh expression ids): with
     # srp_state=None the two cogroup sides are the same plan, and
@@ -1282,28 +1310,17 @@ def semantic_dedup_incremental(
     def find_dropped(bdf: pd.DataFrame, edf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        m, n = len(bdf), len(edf)
-        if m == 0 or n == 0:
+        if len(bdf) == 0 or len(edf) == 0:
             return bdf.iloc[0:0][[id_col]]
-        bid = bdf[id_col].to_numpy()
-        eid = edf["__e_id"].to_numpy()
-        bmat = np.stack(bdf["vec"].to_numpy())
-        emat = np.stack(edf["__e_v"].to_numpy())
-        bn = bdf["norm"].to_numpy(dtype=np.float64)
-        en = edf["__e_n"].to_numpy(dtype=np.float64)
-        drop = np.zeros(m, dtype=bool)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            for s in range(0, m, row_block):
-                e = min(s + row_block, m)
-                for cs in range(0, n, col_block):
-                    ce = min(cs + col_block, n)
-                    sims = (bmat[s:e] @ emat[cs:ce].T) / (
-                        bn[s:e, None] * en[None, cs:ce]
-                    )
-                    r4 = np.floor(sims * 10.0**4 + 0.5) * 1e-4
-                    hit = (r4 >= threshold) | np.isnan(sims)
-                    mask = eid[None, cs:ce] < bid[s:e, None]
-                    drop[s:e] |= (hit & mask).any(axis=1)
+        edf = edf.sort_values("__e_id", kind="mergesort")
+        drop = drops(
+            bdf[id_col].to_numpy(),
+            np.stack(bdf["vec"].to_numpy()),
+            bdf["norm"].to_numpy(dtype=np.float64),
+            edf["__e_id"].to_numpy(),
+            np.stack(edf["__e_v"].to_numpy()),
+            edf["__e_n"].to_numpy(dtype=np.float64),
+        )
         return bdf.loc[drop, [id_col]]
 
     dropped = (

@@ -50,21 +50,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_cookbook_spark.functions.text import gopher_repetition, quality_exprs
-from bigdata_cookbook_spark.operators.dedup import doc_shingles, ngram_jaccard_pairs
-
-def _batch_shingle_index(df: DataFrame, n: int) -> DataFrame:
-    """(doc_id, shingle=xxhash64, n_sh) inverted-index rows — the same
-    shingle definition and hash key as ngram_jaccard_pairs, with the
-    per-doc shingle count denormalized onto every row so cross-batch
-    Jaccard needs no extra join against a size table."""
-    from pyspark.sql import Window
-
-    sh = doc_shingles(df, "text", "doc_id", n).select(
-        "doc_id", F.xxhash64("shingle").alias("shingle")
-    )
-    return sh.withColumn(
-        "n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
-    )
+from bigdata_cookbook_spark.operators.corpus import (
+    join_rewritten_text,
+    line_filter_split,
+    paragraph_dedup_incremental,
+    span_dedup_incremental,
+)
+from bigdata_cookbook_spark.operators.dedup import (
+    jaccard_verify_on_index,
+    ngram_jaccard_pairs,
+    shingle_index,
+)
 
 
 def _cross_batch_neardup(
@@ -114,66 +110,6 @@ def _cross_batch_neardup(
         ).alias("jaccard"),
     )
     return jac.filter(F.col("jaccard") >= threshold).select("doc_id").distinct()
-
-
-def _verify_candidates(
-    candidates: DataFrame,
-    batch_idx: DataFrame,
-    shingle_state: DataFrame | None,
-    batch_ids: DataFrame,
-    threshold: float,
-) -> DataFrame:
-    """Exact-Jaccard verification of LSH candidate pairs; returns the
-    BATCH doc_ids that verify as near-dups (first-arrival-wins: a batch
-    doc loses to any verified partner that is in the state, or to a
-    smaller-id batch partner).
-
-    Every join here keys on candidate doc_ids, so the cost is bounded
-    by |candidates| x per-doc shingle count — never the inverted-index
-    sum(df^2). The shingle lookup side is the batch index plus the
-    persisted state (state docs only ever appear as the KEPT partner).
-    """
-    idx = (
-        batch_idx
-        if shingle_state is None
-        else batch_idx.unionByName(shingle_state)
-    )
-    # candidates are least-id-first (doc_a < doc_b); under ingest-once
-    # ordered ids the batch side of a cross pair is doc_b, and within
-    # batch doc_b is the larger id — the loser in both cases
-    cand = candidates.join(
-        batch_ids.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_semi"
-    )
-    a = idx.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shingle").alias("sh"),
-        F.col("n_sh").alias("n_a"),
-    )
-    b = idx.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shingle").alias("sh"),
-        F.col("n_sh").alias("n_b"),
-    )
-    # expand each pair to doc_a's shingle rows, then equi-join the b side
-    # on BOTH (doc_b, sh) — intersection rows materialize directly, never
-    # the per-pair |sh_a| x |sh_b| cross product
-    inter = (
-        cand.join(a, "doc_a")
-        .join(b, ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    jac = inter.select(
-        "doc_b",
-        F.round(
-            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 4
-        ).alias("jaccard"),
-    )
-    return (
-        jac.filter(F.col("jaccard") >= threshold)
-        .select(F.col("doc_b").alias("doc_id"))
-        .distinct()
-    )
 
 
 def incremental_corpus_clean(
@@ -292,14 +228,10 @@ def incremental_corpus_clean(
 
     dropped_line = None
     if line_filter:
-        from bigdata_cookbook_spark.functions.text import line_filter_exprs
-
         # Stateless RefinedWeb line-wise corrections, FIRST (the batch
         # capstone's order: right after HTML extraction, before every
-        # dedup stage) — kept docs carry the line-cleaned text, docs
-        # whose kept text falls under half the original drop whole,
-        # booked as dropped_line_filter. No state, no delta.
-        lf = line_filter_exprs(F.col("text"))
+        # dedup stage) — booked as dropped_line_filter. No state, no
+        # delta.
         # This function returns ~15 frames that the foreachBatch sink
         # consumes as SEPARATE actions (9 parquet writes + the drop-log
         # union); with a fully lazy chain every action would re-execute
@@ -309,16 +241,8 @@ def incremental_corpus_clean(
         # (MEMORY_AND_DISK), freed when the micro-batch's DataFrames
         # are dropped. Materialization changes no rows, so parity with
         # the batch pipeline stays pinned by the streaming-parity suite.
-        staged = batch_docs.select(
-            "doc_id",
-            lf["text_clean"].alias("__clean"),
-            lf["doc_keep"].alias("__keep"),
-            "lang",
-            "source",
-        ).localCheckpoint(eager=False)
-        dropped_line = staged.filter(~F.col("__keep")).select("doc_id")
-        batch_docs = staged.filter(F.col("__keep")).select(
-            "doc_id", F.col("__clean").alias("text"), "lang", "source"
+        batch_docs, dropped_line = line_filter_split(
+            batch_docs, lambda df: df.localCheckpoint(eager=False)
         )
 
     dropped_dsir = None
@@ -359,62 +283,22 @@ def incremental_corpus_clean(
 
     new_paras = None
     if paragraph_sep is not None:
-        from bigdata_cookbook_spark.operators.corpus import (
-            paragraph_dedup_incremental,
-        )
-
         pr = paragraph_dedup_incremental(
             batch_docs, para_state, sep=paragraph_sep
         )
-        batch_docs = (
-            batch_docs.drop("text")
-            .join(
-                pr["rewritten"].select(
-                    "doc_id", F.col("text_deduped").alias("text")
-                ),
-                "doc_id",
-                "left",
-            )
-            .select(
-                "doc_id",
-                F.coalesce("text", F.lit("")).alias("text"),
-                "lang",
-                "source",
-            )
-            # fan-out: the span stage consumes this spine twice (its
-            # own split + the join-back) — §3.3, see line-filter note
-            .localCheckpoint(eager=False)
-        )
+        # fan-out: the span stage consumes this spine twice (its own
+        # split + the join-back) — see the line-filter note
+        batch_docs = join_rewritten_text(
+            batch_docs, pr["rewritten"]
+        ).localCheckpoint(eager=False)
         new_paras = pr["new_paras"]
 
     new_spans = None
     if span_tokens is not None:
-        from bigdata_cookbook_spark.operators.corpus import (
-            span_dedup_incremental,
-        )
-
         sp = span_dedup_incremental(
             batch_docs, span_state, span_tokens=span_tokens
         )
-        # left join: a doc whose every span was removed (or that was
-        # blank on arrival) carries empty text into the quality stage
-        # and is dropped + BOOKED there, never silently lost
-        batch_docs = (
-            batch_docs.drop("text")
-            .join(
-                sp["rewritten"].select(
-                    "doc_id", F.col("text_deduped").alias("text")
-                ),
-                "doc_id",
-                "left",
-            )
-            .select(
-                "doc_id",
-                F.coalesce("text", F.lit("")).alias("text"),
-                "lang",
-                "source",
-            )
-        )
+        batch_docs = join_rewritten_text(batch_docs, sp["rewritten"])
         new_spans = sp["new_spans"]
 
     feats = quality_exprs(F.col("text"))
@@ -481,7 +365,7 @@ def incremental_corpus_clean(
     # it is deliberately NOT checkpointed: storing it costs more block
     # serialization than the shuffle-free recompute (§3.3's trade works
     # the other way here)
-    batch_idx = _batch_shingle_index(exact_kept, ngram_n)
+    batch_idx = shingle_index(exact_kept, n=ngram_n)
     new_buckets = None
     if near_dup == "lsh":
         from bigdata_cookbook_spark.operators.dedup import (
@@ -495,14 +379,30 @@ def incremental_corpus_clean(
             num_hashes=lsh_num_hashes,
             band_size=lsh_band_size,
         )
-        batch_ids = exact_kept.select("doc_id")
+        # exact-Jaccard verification of the candidates over the batch
+        # index plus the persisted state (state docs only ever appear
+        # as the KEPT partner). Candidates are least-id-first
+        # (doc_a < doc_b); under ingest-once ordered ids the batch side
+        # of a cross pair is doc_b, and within batch doc_b is the
+        # larger id — the loser in both cases (first-arrival-wins)
+        idx = (
+            batch_idx
+            if shingle_state is None
+            else batch_idx.unionByName(shingle_state)
+        )
+        cand = lsh["candidates"].join(
+            exact_kept.select(F.col("doc_id").alias("doc_b")),
+            "doc_b",
+            "left_semi",
+        )
         # lineage = the banding DAG + the verify joins; consumed by the
-        # kept anti-join AND the drop log (§3.3 — the batch tier's
-        # candidate-list checkpoint precedent)
-        near_losers = _verify_candidates(
-            lsh["candidates"], batch_idx, shingle_state, batch_ids,
-            jaccard_threshold,
-        ).localCheckpoint(eager=False)
+        # kept anti-join AND the drop log
+        near_losers = (
+            jaccard_verify_on_index(cand, idx, jaccard_threshold)
+            .select(F.col("doc_b").alias("doc_id"))
+            .distinct()
+            .localCheckpoint(eager=False)
+        )
         # append-only delta: just this batch's band rows (see docstring
         # for the ingest-once assumption vs lsh["buckets"]'s replacement)
         new_buckets = (

@@ -416,7 +416,11 @@ def pretraining_pipeline(
     """
     from bigdata_cookbook_spark.operators.corpus import (
         corpus_clean,
+        join_rewritten_text,
         length_curriculum_from_counts,
+        line_filter_split,
+        paragraph_dedup,
+        span_dedup,
     )
     from bigdata_cookbook_spark.operators.sampling import domain_mix_sample, shuffle_key
 
@@ -476,73 +480,31 @@ def pretraining_pipeline(
 
     dropped_line = None
     if line_filter:
-        from bigdata_cookbook_spark.functions.text import line_filter_exprs
+        def _hold(df):
+            df = df.persist()
+            temp_caches.append(df)
+            return df
 
         # RefinedWeb order: line-wise corrections run on the extracted
         # text BEFORE the dedup stages, so boilerplate lines never seed
         # paragraph/span/near-dup matches. Both a rewrite (kept docs
-        # carry the cleaned text) and a drop (a doc whose kept text is
-        # under half the original goes whole, booked as
+        # carry the cleaned text) and a drop (booked as
         # dropped_line_filter).
-        lf = line_filter_exprs(F.col("text"))
-        staged = docs.select(
-            "doc_id",
-            lf["text_clean"].alias("__clean"),
-            lf["doc_keep"].alias("__keep"),
-            "lang",
-            "source",
-        )
-        if with_accounting:
-            staged = staged.persist()
-            temp_caches.append(staged)
-        dropped_line = staged.filter(~F.col("__keep")).select("doc_id")
-        docs = staged.filter(F.col("__keep")).select(
-            "doc_id", F.col("__clean").alias("text"), "lang", "source"
+        docs, dropped_line = line_filter_split(
+            docs, _hold if with_accounting else None
         )
 
     if paragraph_dedup_sep is not None:
-        from bigdata_cookbook_spark.operators.corpus import paragraph_dedup
-
-        para_rw = paragraph_dedup(docs, sep=paragraph_dedup_sep).select(
-            "doc_id", F.col("text_deduped").alias("text")
-        )
-        # paragraph_dedup emits a row per input doc, but the left join +
-        # coalesce keeps the blank-doc contract identical to the span
-        # stage: an emptied doc flows into the quality stage and is
-        # dropped + booked there
-        docs = (
-            docs.drop("text")
-            .join(para_rw, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce("text", F.lit("")).alias("text"),
-                "lang",
-                "source",
-            )
+        docs = join_rewritten_text(
+            docs, paragraph_dedup(docs, sep=paragraph_dedup_sep)
         )
         if with_accounting:
             docs = docs.persist()
             temp_caches.append(docs)
 
     if span_dedup_tokens is not None:
-        from bigdata_cookbook_spark.operators.corpus import span_dedup
-
-        rewritten = span_dedup(
-            docs, span_tokens=span_dedup_tokens
-        ).select("doc_id", F.col("text_deduped").alias("text"))
-        # left join + coalesce: a blank-on-arrival doc (span_dedup emits
-        # no row for it) carries empty text into the quality stage and
-        # is dropped + booked there — an inner join would silently lose
-        # it and break the accounting-sums-exactly invariant
-        docs = (
-            docs.drop("text")
-            .join(rewritten, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce("text", F.lit("")).alias("text"),
-                "lang",
-                "source",
-            )
+        docs = join_rewritten_text(
+            docs, span_dedup(docs, span_tokens=span_dedup_tokens)
         )
         if with_accounting:
             docs = docs.persist()

@@ -1667,9 +1667,13 @@ def test_paragraph_dedup_incremental_two_batch_parity(spark):
         (2, "FOOTER\ngamma\n"),
         (3, "FOOTER\nalpha beta\n"),
         (4, "gamma\ndelta"),
+        # NULL text reads as '' in both forms: one empty paragraph, kept
+        (5, None),
+        (6, ""),
     ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
     want = {tuple(r) for r in paragraph_dedup(docs).collect()}
+    assert (5, "", 1, 1) in want and (6, "", 1, 1) in want
 
     b1 = docs.filter(F.col("doc_id") <= 2)
     b2 = docs.filter(F.col("doc_id") > 2)
