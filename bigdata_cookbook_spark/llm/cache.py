@@ -5,18 +5,22 @@ LLM call md5-hashes (prompt + params) and round-trips a pickle file, so
 re-runs only pay for new prompts.
 
 Spark-native shape: the cache is a DataFrame/parquet table keyed by
-``cache_key = md5(prompt_version <US> key cols...)``. A left-anti join
-splits the unique work set into hits and misses; only misses reach the
-backend; the union of hits + fresh results is both the answer and the next
-cache state. At 100 TB the anti join shuffles on an md5 key — uniformly
-distributed by construction, no skew — and the cache table is readable as a
-plain parquet snapshot (no external KV store needed).
+``cache_key = md5(prompt_version <US> key cols...)``. The keyed input is
+materialized once (lazy localCheckpoint) and every consumer reads it. An
+inner join and a left-anti join split its unique keys into hits and
+misses; only misses reach the backend. The union of hits + fresh results
+is materialized once more, and both the answer's join-back and the next
+cache state read it, so each miss key reaches the backend exactly once
+per run. At 100 TB the joins shuffle on an md5 key — uniformly
+distributed by construction, no skew — and the cache table is readable as
+a plain parquet snapshot (no external KV store needed).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,10 +46,15 @@ def empty_cache(spark: SparkSession) -> DataFrame:
 
 
 def load_cache(spark: SparkSession, path: str) -> DataFrame:
-    """Read a cache snapshot; missing path -> empty cache."""
+    """Read a cache snapshot; a missing path (first run: no snapshot yet)
+    gives an empty cache. Any other failure — an unknown filesystem
+    scheme, denied access — raises: silently starting empty would
+    re-label every key."""
     try:
         return spark.read.schema(CACHE_SCHEMA).parquet(path)
-    except Exception:  # noqa: BLE001 — first run: no snapshot yet
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return empty_cache(spark)
 
 
@@ -67,7 +76,11 @@ def cached_label_stage(
     next run. Backend is invoked for cache-miss keys only.
     """
     keys = list(key_cols)
-    keyed = df.withColumn("cache_key", cache_key_col(prompt_version, keys))
+    # the join-back and the unique-key set both read the keyed input:
+    # materialize it once instead of re-running its lineage per consumer
+    keyed = df.withColumn(
+        "cache_key", cache_key_col(prompt_version, keys)
+    ).localCheckpoint(eager=False)
     unique = keyed.select("cache_key", *keys, text_col).dropDuplicates(["cache_key"])
 
     hits = unique.join(
@@ -83,12 +96,11 @@ def cached_label_stage(
         batch_size=batch_size,
         guardrail=False,  # guardrail applied once, below, on the full result
     ).select("cache_key", *keys, "label", "motivation")
-    # persist: downstream consumers (the labeled result AND the new cache
-    # snapshot) must not re-trigger backend calls — recomputation here
-    # costs real LLM money, the exact failure S4 exists to prevent
-    fresh = fresh.persist()
-
-    all_labels = hits.unionByName(fresh)
+    # both outputs (the labeled result AND the new cache snapshot) read
+    # all_labels: one materialization, so a second consumer re-runs
+    # neither the backend calls — real LLM money, the exact failure S4
+    # exists to prevent — nor the hits join
+    all_labels = hits.unionByName(fresh).localCheckpoint(eager=False)
     new_cache = all_labels.select(
         "cache_key",
         F.col(keys[0]).cast("string").alias("entity_id"),

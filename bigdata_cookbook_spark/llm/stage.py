@@ -85,9 +85,9 @@ def llm_label_stage(
             yield pd.DataFrame(results)
 
     # Key columns keep their INPUT types in the mapInPandas output so the
-    # join-back is a same-type equi-join: coercing keys to string (the
-    # round-7 shape) made Spark compare long-vs-string through an implicit
-    # cast, which blocks co-partitioned/bucketed join reuse at scale.
+    # join-back is a same-type equi-join: string-coerced keys would make
+    # Spark compare long-vs-string through an implicit cast, which blocks
+    # co-partitioned/bucketed join reuse at scale.
     from pyspark.sql.types import StringType, StructField, StructType
 
     out_schema = StructType(

@@ -8,14 +8,16 @@ per (theme, topic): drop-duplicate texts, pack into <=max_tokens chunks,
 summarize each chunk, wrap the chunk summaries as reports, summarize the
 summaries; n_documents = nunique(document_id).
 
-Spark-native shape: the tree reduce is expressed as iterative DataFrame
-stages. Each level packs rows into token-budget groups relationally
-(pack_token_budget — a window cumsum, one shuffle on the group key) and
-runs one applyInPandas pass that calls the backend once per pack. Levels
-halve (or better) the row count, so depth is logarithmic in corpus size;
-each level is a full cluster-parallel stage, never a driver loop over
-groups. The backend is a plain ``list[str] -> str`` callable so the
-deterministic stub and a real LLM client are interchangeable.
+Spark-native shape: one ``repartition(*keys).mapInPandas`` pass. The
+shuffle brings every row of a key into one task; there the whole tree
+for that key runs: dedup, pack by ``pack_token_budget``'s chars4
+start-offset rule (``_pack_ids``), one backend call per pack, repeat on
+the summaries until the key has one row or ``max_levels`` is reached.
+Keys are independent, so each stops at its own depth, and keys spread
+over the shuffle's tasks. Building the frame runs no Spark job; the
+consumer's action runs the tree once. The backend is a plain
+``list[str] -> str`` callable so the deterministic stub and a real LLM
+client are interchangeable.
 """
 
 from __future__ import annotations
@@ -27,8 +29,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bigdata_cookbook_spark.llm.stage import pack_token_budget
-
 SummarizeBackend = Callable[[list[str]], str]
 
 
@@ -39,45 +39,44 @@ def stub_summarizer(texts: list[str]) -> str:
     return f"[summary n={len(texts)} {h}]"
 
 
-def _summarize_level(
-    df: DataFrame,
-    keys: Sequence[str],
-    text_col: str,
+def _pack_ids(texts: Sequence[str | None], max_tokens: int) -> list[int]:
+    """Pack id of each text, in order: ``pack_token_budget``'s chars4 rule
+    (estimate = max(chars // 4, 1), NULL counts 1; pack id = starting
+    offset / max_tokens, truncated) — the same double division Spark
+    plans, so ids match the relational form bit for bit."""
+    ids, start = [], 0
+    for t in texts:
+        ids.append(int(start / max_tokens))
+        start += max(len(t) // 4, 1) if t is not None else 1
+    return ids
+
+
+def _null_first(t: str | None) -> tuple[bool, str]:
+    """Sort key of Spark's ascending NULLS FIRST string order (code-point
+    order is UTF-8 byte order)."""
+    return (t is not None, t or "")
+
+
+def _tree_reduce(
+    texts: list[str | None],
     backend: SummarizeBackend,
     max_tokens: int,
-) -> DataFrame:
-    """One tree level: pack rows per key, one backend call per pack."""
-    packed = pack_token_budget(
-        df.select(*keys, text_col),
-        group_cols=keys,
-        text_col=text_col,
-        max_tokens=max_tokens,
-        order_cols=[*keys, text_col],  # deterministic pack membership
-    )
-
-    key_list = list(keys)
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            rows = []
-            for kv, grp in pdf.groupby([*key_list, "pack_id"], sort=True):
-                texts = grp[text_col].dropna().tolist()
-                rows.append(
-                    {
-                        **dict(zip(key_list, kv[: len(key_list)])),
-                        text_col: backend(texts) if texts else "",
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[*key_list, text_col])
-
-    out_schema = ", ".join([f"{k} string" for k in key_list] + [f"{text_col} string"])
-    # groupBy-key repartition so every pack of a key lands in one task
-    return (
-        packed.repartition(*key_list)
-        .mapInPandas(run, schema=out_schema)
-    )
+    max_levels: int,
+) -> list[str | None]:
+    """One key's tree: distinct texts (NULL kept once) in ascending order,
+    NULLs first; each level calls ``backend`` once per pack (NULLs left
+    out, an all-NULL pack gives "") until one row is left."""
+    level = sorted(set(texts), key=_null_first)
+    for _ in range(max_levels):
+        packs: dict[int, list[str]] = {}
+        for pid, t in zip(_pack_ids(level, max_tokens), level):
+            packs.setdefault(pid, [])
+            if t is not None:
+                packs[pid].append(t)
+        level = sorted(backend(p) if p else "" for p in packs.values())
+        if len(level) <= 1:
+            break
+    return level
 
 
 def hierarchical_summarize(
@@ -92,34 +91,44 @@ def hierarchical_summarize(
     """L5: reduce all texts per key to one summary row per key.
 
     Returns ``keys... , summary, n_documents`` (n_documents only when
-    ``doc_col`` given = countDistinct of it, reference summarize.py:117).
-    Duplicate texts are dropped before the first level (the reference's
-    dedup-before-LLM rule, SURVEY §4).
+    ``doc_col`` given = distinct non-null values of it, reference
+    summarize.py:117). Duplicate texts are dropped before the first level
+    (the reference's dedup-before-LLM rule, SURVEY §4). A key that still
+    has several rows after ``max_levels`` levels keeps them all. Rows
+    whose key holds a NULL are dropped, as the reference's pandas groupby
+    drops them.
     """
+    if max_tokens <= 0:
+        raise ValueError("max_tokens must be positive")
     keys = list(keys)
     casted = df.select(
         *[F.col(k).cast("string").alias(k) for k in keys],
         F.col(text_col).cast("string").alias(text_col),
         *([F.col(doc_col).alias("__doc")] if doc_col else []),
     )
-    n_docs = (
-        casted.groupBy(*keys).agg(F.countDistinct("__doc").alias("n_documents"))
-        if doc_col
-        else None
+    out_cols = [*keys, "summary", *(["n_documents"] if doc_col else [])]
+
+    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        parts = [p for p in pdfs if not p.empty]
+        if not parts:
+            return
+        pdf = pd.concat(parts, ignore_index=True)
+        rows = []
+        for kv, grp in pdf.groupby(keys, sort=True):
+            key = dict(zip(keys, kv))
+            n_docs = {"n_documents": grp["__doc"].nunique()} if doc_col else {}
+            texts = grp[text_col].tolist()
+            for summary in _tree_reduce(texts, backend, max_tokens, max_levels):
+                rows.append({**key, "summary": summary, **n_docs})
+        yield pd.DataFrame(rows, columns=out_cols)
+
+    out_schema = ", ".join(
+        [f"`{k}` string" for k in keys]
+        + ["summary string"]
+        + (["n_documents bigint"] if doc_col else [])
     )
-
-    level = casted.select(*keys, text_col).dropDuplicates([*keys, text_col])
-    for _ in range(max_levels):
-        level = _summarize_level(level, keys, text_col, backend, max_tokens)
-        counts = level.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
-        max_n = counts.agg(F.max("n")).collect()[0][0]
-        if max_n is None or max_n <= 1:
-            break
-
-    out = level.withColumnRenamed(text_col, "summary")
-    if n_docs is not None:
-        out = out.join(n_docs, on=keys, how="left")
-    return out
+    # hash-partition on the key so all of a key's rows meet in one task
+    return casted.repartition(*keys).mapInPandas(run, schema=out_schema)
 
 
 def reduce_summaries(

@@ -44,13 +44,12 @@ def thematic_screener(
         chunk_ids = hits.select("sentence_id").distinct()
         chunks = chunks.join(chunk_ids, "sentence_id", "left_semi")
     mode = "watchlist" if watchlist else "discovery"
-    # Round 12 (guide §3.3): the returned dict's four frames are
-    # consumed as SEPARATE actions by callers (the migration example
-    # materializes all four), and labeled's lineage contains the
-    # backend mapInPandas — the single most expensive node of any real
-    # deployment (an LLM call per unique key). Without materialization
-    # every consumer re-ran normalize + the backend stage. Lazy
-    # localCheckpoints at both fan-out nodes; values unchanged.
+    # §3.3: callers consume the returned dict's four frames as separate
+    # actions (the migration example materializes all four), and
+    # labeled's lineage holds the backend mapInPandas — the most
+    # expensive node of any real deployment (an LLM call per unique key).
+    # Lazy localCheckpoints at both fan-out nodes run normalize and the
+    # backend stage once.
     screening = normalize_screening(
         documents, chunks, entities, mode=mode, watchlist=watchlist
     ).localCheckpoint(eager=False)
@@ -177,38 +176,36 @@ def report_generator(
         ~F.col("label").isin("", "unassigned", "unclear", "U")
     ).localCheckpoint(eager=False)
 
-    # L5 per (entity, label) from the two document populations
-    filings = labeled.filter(F.col("document_type").isin("filings", "transcripts"))
-    news = labeled.filter(F.col("document_type") == "news")
+    # L5 per (entity, label, population) in one summary pass: filings
+    # (filings + transcripts) and news are summarized apart, other
+    # document types not at all
+    population = F.when(
+        F.col("document_type").isin("filings", "transcripts"), "filings"
+    ).when(F.col("document_type") == "news", "news")
+    summaries = hierarchical_summarize(
+        labeled.withColumn("population", population).filter(
+            F.col("population").isNotNull()
+        ),
+        keys=["entity_name", "label", "population"],
+        text_col="masked_text",
+        doc_col="document_id",
+        backend=summarize_backend,
+    )
 
-    def summaries(df: DataFrame, out: str) -> DataFrame:
-        return hierarchical_summarize(
-            df,
-            keys=["entity_name", "label"],
-            text_col="masked_text",
-            doc_col="document_id",
-            backend=summarize_backend,
-        ).withColumnRenamed("summary", out)
-
-    f_sum = summaries(filings, "filings_summary")
-    n_sum = summaries(news, "news_summary")
+    def of(pop: str, col: str) -> F.Column:
+        return F.max(F.when(F.col("population") == pop, F.col(col)))
 
     # J10: filings summary preferred, news fallback
     merged = (
-        f_sum.select("entity_name", "label", "filings_summary")
-        .join(
-            n_sum.select(
-                "entity_name", "label", "news_summary",
-                F.col("n_documents").alias("n_news_docs"),
-            ),
-            ["entity_name", "label"],
-            "full_outer",
+        summaries.groupBy("entity_name", "label")
+        .agg(
+            of("filings", "summary").alias("filings_summary"),
+            of("news", "summary").alias("news_summary"),
+            of("news", "n_documents").alias("n_news_docs"),
         )
-        .withColumn(
-            "summary", F.coalesce("filings_summary", "news_summary")
-        )
+        .withColumn("summary", F.coalesce("filings_summary", "news_summary"))
         # §3.3: consumed by the report join AND returned — and the
-        # lineage holds both hierarchical-summarize backends
+        # lineage holds the summarize backend
         .localCheckpoint(eager=False)
     )
 

@@ -705,3 +705,36 @@ def test_sentence_budget_stats_kernel_matches_expression_tier(spark):
     # the exotica rows actually exercised the interesting branches
     assert expr_rows[907][2] is not None
     assert expr_rows[900] == (None, None, None)
+
+
+def test_summarize_pack_ids_match_pack_token_budget(spark):
+    """hierarchical_summarize packs inside its Arrow task; its pack ids
+    must equal pack_token_budget's chars4 rule (relational window
+    cumsum) on the same texts in the kernel's order (ascending, NULLs
+    first): NULL, empty, multi-byte (2-, 3- and 4-byte UTF-8 count one
+    char each) and texts exactly one budget long, which put a pack's
+    start offset exactly on the boundary."""
+    from bigdata_cookbook_spark.llm.stage import pack_token_budget
+    from bigdata_cookbook_spark.llm.summarize import _null_first, _pack_ids
+
+    alphabet = "ab xé日😀"
+    texts = st.one_of(st.none(), st.text(alphabet=alphabet, max_size=40))
+
+    @settings(max_examples=8, deadline=None, derandomize=True)
+    @given(st.lists(texts, max_size=30), st.integers(min_value=1, max_value=12))
+    def check(rand, max_tokens):
+        rows = rand + [None, None, "", "", "😀" * 4 * max_tokens, "ab" * 2 * max_tokens]
+        df = spark.createDataFrame([("g", t) for t in rows], "grp string, text string")
+        spark_ids = sorted(
+            ((r["text"] is not None, r["text"] or ""), r["pack_id"])
+            for r in pack_token_budget(
+                df, ["grp"], "text", max_tokens, ["grp", "text"], estimator="chars4"
+            ).collect()
+        )
+        ordered = sorted(rows, key=_null_first)
+        kernel_ids = sorted(
+            (_null_first(t), p) for t, p in zip(ordered, _pack_ids(ordered, max_tokens))
+        )
+        assert kernel_ids == spark_ids
+
+    check()

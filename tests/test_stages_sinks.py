@@ -78,6 +78,45 @@ def test_cache_miss_then_hit(spark, labeled_input, tmp_path):
     assert cache2.count() == 100
 
 
+def test_cached_label_stage_evaluates_input_once(spark, labeled_input, tmp_path):
+    """Writing both outputs evaluates each input row once (the keyed
+    input and the hits + fresh union are each materialized once) and
+    hands each miss key to the backend once."""
+    seen = str(tmp_path / "seen")
+    calls = str(tmp_path / "calls")
+    os.makedirs(seen)
+    os.makedirs(calls)
+
+    def mark(batches):
+        import uuid
+
+        for pdf in batches:
+            with open(os.path.join(seen, uuid.uuid4().hex), "w") as f:
+                f.write(str(len(pdf)))
+            yield pdf
+
+    counted = labeled_input.mapInPandas(mark, schema=labeled_input.schema)
+    out, new_cache = cached_label_stage(
+        counted, make_counting_backend(calls), empty_cache(spark)
+    )
+    out.write.parquet(str(tmp_path / "labeled"))
+    new_cache.write.parquet(str(tmp_path / "cache"))
+    assert rows_labeled(seen) == 200  # 100 keys x 2 rows, each read once
+    assert rows_labeled(calls) == 100
+    assert spark.read.parquet(str(tmp_path / "labeled")).count() == 200
+    assert spark.read.parquet(str(tmp_path / "cache")).count() == 100
+
+
+def test_load_cache_missing_path_only(spark, tmp_path):
+    """Only a missing path means "no snapshot yet"; any other read
+    failure (here an unknown filesystem scheme) raises."""
+    cache = load_cache(spark, str(tmp_path / "no_snapshot_yet"))
+    assert cache.count() == 0
+    assert cache.schema == empty_cache(spark).schema
+    with pytest.raises(Exception, match="nosuchfs"):
+        load_cache(spark, "nosuchfs://bucket/cache")
+
+
 def test_cache_prompt_version_invalidates(spark, labeled_input, tmp_path):
     _out, cache1 = cached_label_stage(
         labeled_input,
@@ -186,6 +225,78 @@ def test_hierarchical_summarize_multi_level_and_dedup(spark):
     assert {r.theme: r.summary for r in out2.collect()} == {
         k: v.summary for k, v in got.items()
     }
+
+
+def test_hierarchical_summarize_stops_each_key_at_one_row(spark, tmp_path):
+    """A key that reaches one row stops, while a deeper key keeps
+    reducing: ``b`` is one summary of its two texts, not a summary of
+    its own summary. Calls are attributed to keys through their inputs."""
+    import json
+
+    markers = str(tmp_path / "calls")
+    os.makedirs(markers)
+
+    def backend(texts: list[str]) -> str:
+        import uuid
+
+        out = stub_summarizer(texts)
+        with open(os.path.join(markers, uuid.uuid4().hex), "w") as f:
+            json.dump({"in": texts, "out": out}, f)
+        return out
+
+    a_texts = [f"a body {i} " + "x" * 50 for i in range(30)]
+    df = spark.createDataFrame(
+        [("a", t) for t in a_texts] + [("b", "b one"), ("b", "b two")],
+        "theme string, text string",
+    )
+    got = {
+        r.theme: r.summary
+        for r in hierarchical_summarize(
+            df, keys=["theme"], text_col="text", backend=backend, max_tokens=40
+        ).collect()
+    }
+    assert got["b"] == stub_summarizer(["b one", "b two"])
+    assert got["b"] == "[summary n=2 de1535048cd8]"
+
+    calls = []
+    for name in os.listdir(markers):
+        with open(os.path.join(markers, name)) as f:
+            calls.append(json.load(f))
+    owner = {t: "a" for t in a_texts} | {"b one": "b", "b two": "b"}
+    per_key = {"a": 0, "b": 0}
+    while calls:  # a call's key is its inputs' key; its output inherits it
+        ready = [c for c in calls if c["in"][0] in owner]
+        assert ready, "call inputs that no key produced"
+        for c in ready:
+            owner[c["out"]] = owner[c["in"][0]]
+            per_key[owner[c["out"]]] += 1
+        calls = [c for c in calls if c not in ready]
+    # a: 30 texts of 14-15 tokens -> 11 packs -> 2 packs -> 1 summary
+    assert per_key == {"a": 14, "b": 1}
+
+
+def test_hierarchical_summarize_builds_without_jobs(spark):
+    """Building the summary frame (or rejecting a non-positive budget)
+    submits no Spark job; its consumer's action is the one pass."""
+    df = spark.createDataFrame(
+        [("t1", f"doc{i}", f"text {i}") for i in range(40)],
+        "theme string, doc_id string, text string",
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("summarize-build", "summarize build probe")
+    try:
+        # 40 one-token texts at budget 10: 4 packs -> 2 -> 1, three levels
+        out = hierarchical_summarize(
+            df, keys=["theme"], text_col="text", doc_col="doc_id", max_tokens=10
+        )
+        with pytest.raises(ValueError, match="max_tokens"):
+            hierarchical_summarize(df, keys=["theme"], text_col="text", max_tokens=0)
+        assert sc.statusTracker().getJobIdsForGroup("summarize-build") == []
+        rows = out.collect()
+        assert [(r.summary[:13], r.n_documents) for r in rows] == [("[summary n=2 ", 40)]
+        assert sc.statusTracker().getJobIdsForGroup("summarize-build")
+    finally:
+        sc.setJobGroup("", "")
 
 
 def test_graph_dot_export(spark):
