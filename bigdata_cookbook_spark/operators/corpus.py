@@ -1,31 +1,51 @@
-"""End-to-end corpus cleaning (training-data pipeline capstone).
+"""The corpus-clean spine and the training-data stages around it.
 
-The canonical pre-training data flow over a raw document corpus:
+    [line filter ->] [DSIR gate ->] [paragraph dedup ->] [span dedup ->]
+    quality [+ repetition] -> exact dedup -> near-dup removal
+    [-> decontamination] [-> pinned quality prune] [-> semantic dedup]
 
-    quality filter  ->  exact dedup  ->  near-dup removal
-
-composed from the engine's own tiers (functions/text.py quality exprs,
-hash-group exact dedup, inverted-index n-gram Jaccard — swap in
-minhash_lsh_candidates as the candidate generator at 100 TB). Every
-stage keeps its drop set, so the pipeline reports WHAT it removed and
-why — the property a production data pipeline is audited on.
+incremental_corpus_clean is the one body of that spine: it cleans one
+batch against optional append-only state (seen text hashes, shingle
+index, LSH band buckets, paragraphs, spans, embeddings), and with no
+state it is the batch operator. corpus_clean (the registry row),
+workflows.pretraining_pipeline and streaming/pipeline.
+streaming_corpus_clean all call it. Every stage keeps its drop set, so
+a run reports what it removed and why.
 
 Determinism: survivors of an exact-dup group = min doc_id; of a near-dup
 pair = the smaller doc_id (greedy on the pair list; pairs are symmetric
 and the relation is applied as "drop any doc that is the larger side of
 any pair", which over-drops chains slightly but is order-independent —
 declared engine semantics, same in the SQL oracle).
+
+Parity (tests/test_streaming_pipeline.py): when documents arrive in
+non-decreasing doc_id order — the natural shape for append-only ingest
+ids — the union of per-batch kept sets equals the no-state run over the
+union of batches, drop accounting included. First-arrival-wins under
+ordered ingest is the batch near-dup rule PROVIDED the shingle state
+keeps every exact-kept doc, not just survivors: a near-dup loser can
+still be the smaller side of a later doc's pair. Out-of-order ingest
+degrades to first-ingest-wins (declared semantics of the streaming
+form, same as streaming_dedup).
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bigdata_cookbook_spark.functions.text import gopher_repetition, quality_exprs
-from bigdata_cookbook_spark.operators.dedup import ngram_jaccard_pairs
+from bigdata_cookbook_spark.operators.dedup import (
+    _jaccard_from_counts,
+    bloom_contamination,
+    build_shingle_bloom,
+    contamination_pairs,
+    incremental_lsh_candidates,
+    jaccard_verify_on_index,
+    ngram_jaccard_pairs,
+    semantic_dedup_incremental,
+    shingle_index,
+)
 from bigdata_cookbook_spark.sources.testdata import spread_for_cpu_bound
 
 
@@ -46,190 +66,410 @@ def corpus_clean(
     lsh_num_hashes: int = 12,
     lsh_band_size: int = 2,
 ) -> dict[str, DataFrame]:
-    """Returns {kept, dropped_quality, dropped_exact, dropped_neardup}
-    (+ dropped_contaminated AND pre_contamination_kept when ``eval_df``
-    is given — the latter is NOT a drop bucket: it is the
-    pre-decontamination survivor set, exposed so accounting callers can
-    persist the shared prefix; see workflows.pretraining_pipeline).
+    """Batch corpus cleaning: incremental_corpus_clean with no state.
 
-    ``repetition_filter=True`` additionally applies the Gopher n-gram
-    repetition rules (functions/text.gopher_repetition) to the
-    quality-passing documents — failures land in dropped_quality
-    alongside the basic-quality drops. Requires ``min_tokens >= 10``
-    (every rule needs a 10-gram; the prior length filter is what
-    guarantees one), enforced with a ValueError.
+    Returns {kept, dropped_quality, dropped_exact, dropped_neardup}
+    (+ dropped_contaminated when ``eval_df`` is given); kept is
+    (doc_id, lang, source, n_tokens). Every option is the spine's
+    (incremental_corpus_clean) except ``bloom_decontaminate=True``,
+    which builds the eval set's shingle Bloom filter
+    (dedup.build_shingle_bloom at ``contamination_n``) and passes it as
+    the spine's ``eval_bloom``: a bit-identical drop set, with the
+    corpus side streaming through a map-side probe of a <=2 MiB filter
+    instead of entering the full shingle join — the 100 TB default
+    when eval_df is benchmark-sized.
 
-    kept = quality-passing, exact-canonical, near-dup-free documents —
-    and, with an eval benchmark set supplied, decontaminated: any
-    surviving doc whose n-gram containment of an eval doc reaches
-    ``contamination_threshold`` (operators/dedup.contamination_pairs) is
-    dropped last, so dedup never masks a contamination hit.
-
-    ``broadcast_eval`` passes through to contamination_pairs: leave True
-    only when eval_df is benchmark-sized (the broadcast contract there);
-    set False for an eval side that scales with the corpus.
-
-    ``jaccard_df_cap`` passes through to ngram_jaccard_pairs: REQUIRED
-    at corpus scale (the exact form's self-join is quadratic on
-    vocabulary-saturated corpora — sf1-rehearsal finding, measured in
-    BASELINE.md §D); None keeps the exact oracle-tier semantics.
-
-    ``bloom_decontaminate=True`` swaps the decontamination join for the
-    Bloom-prefiltered tier (dedup.bloom_contamination) — bit-identical
-    drop set (false positives verified away, false negatives
-    impossible), but the corpus side streams through a map-side probe
-    of a <=2 MiB filter instead of entering the full shingle join; the
-    100 TB default when eval_df is benchmark-sized.
-
-    ``near_dup`` picks the near-dup tier (the batch twin of
-    streaming/pipeline's option, closing the one asymmetry between the
-    two pipelines):
-
-    - ``"exact"`` (default, the oracle tier): the full inverted-index
-      Jaccard self-join (dedup.ngram_jaccard_pairs), optionally
-      df-capped — every qualifying pair is found.
-    - ``"lsh"``: the 100 TB funnel — MinHash band buckets generate
-      candidate pairs (dedup.minhash_lsh_candidates at
-      ``lsh_num_hashes``/``lsh_band_size``), exact Jaccard verifies
-      ONLY the candidates (dedup.jaccard_verify_pairs: cost bounded by
-      |candidates| x shingles/doc, never the self-join's sum(df^2)).
-      The drop set is a SUBSET of the exact tier's (banding recall
-      < 1 is the documented trade; verification guarantees no false
-      drops), so accounting comparisons across tiers are one-sided by
-      construction. Measured recall on the real corpus at sf1
-      (tools/lsh_recall.py, BASELINE.md §K): drop recall 0.980 at
-      jaccard >= 0.5 and 1.0 at >= 0.7/0.8 with the defaults;
-      ``lsh_num_hashes=24`` is the recall knob (1.0 at every
-      threshold, 2x signature cost, verify stage unchanged).
+    ``near_dup="lsh"`` drops a SUBSET of the exact tier's near-dups
+    (banding recall < 1 is the trade; verification guarantees no false
+    drops). Measured on the real corpus at sf1 (tools/lsh_recall.py,
+    BASELINE.md §K): drop recall 0.980 at jaccard >= 0.5 and 1.0 at
+    >= 0.7/0.8 with the defaults; ``lsh_num_hashes=24`` is the recall
+    knob (1.0 at every threshold, 2x signature cost).
     """
-    # spread the scan for the quality battery (token split + stopword
-    # fold per document; a no-op at cluster scale, where file splits
-    # provide the parallelism)
+    # spread the scan for the quality battery (a no-op at cluster scale,
+    # where file splits provide the parallelism)
     docs = spread_for_cpu_bound(docs)
+    eval_bloom = None
+    if bloom_decontaminate and eval_df is not None:
+        eval_bloom = build_shingle_bloom(eval_df, n=contamination_n)
+    out = incremental_corpus_clean(
+        docs,
+        eval_df=eval_df,
+        lang=lang,
+        min_tokens=min_tokens,
+        max_stopword_ratio=max_stopword_ratio,
+        jaccard_threshold=jaccard_threshold,
+        contamination_threshold=contamination_threshold,
+        contamination_n=contamination_n,
+        broadcast_eval=broadcast_eval,
+        jaccard_df_cap=jaccard_df_cap,
+        repetition_filter=repetition_filter,
+        eval_bloom=eval_bloom,
+        near_dup=near_dup,
+        lsh_num_hashes=lsh_num_hashes,
+        lsh_band_size=lsh_band_size,
+    )
+    keys = ["kept", "dropped_quality", "dropped_exact", "dropped_neardup"]
+    if eval_df is not None:
+        keys.append("dropped_contaminated")
+    return {k: out[k] for k in keys}
+
+
+def _cross_batch_neardup(
+    batch_idx: DataFrame, state_idx: DataFrame, threshold: float
+) -> DataFrame:
+    """Batch doc_ids whose Jaccard vs ANY state doc reaches threshold.
+
+    Inverted-index join on the shingle hash (only co-shingled pairs
+    materialize), scored like ngram_jaccard_pairs but batch-vs-state
+    instead of self-join. With the state laid out bucketed on the
+    shingle key the state-side shuffle disappears
+    (plans/layout.write_bucketed), and the join cost is proportional to
+    the BATCH, not the corpus.
+
+    Scale caveat: the join materializes sum(df_batch x df_state) rows
+    per shingle, and on a vocabulary-saturating corpus df_state grows
+    with everything ever ingested. At the 100 TB tier run
+    ``near_dup="lsh"``, whose band-bucket state bounds per-bucket
+    occupancy; this exact-state form is the parity tier.
+    """
+    a = batch_idx.alias("a")
+    s = state_idx.alias("s")
+    inter = (
+        a.join(s, F.col("a.shingle") == F.col("s.shingle"))
+        # replay/re-ingest: a doc never near-dups itself
+        .filter(F.col("a.doc_id") != F.col("s.doc_id"))
+        .groupBy(
+            F.col("a.doc_id").alias("doc_id"),
+            F.col("s.doc_id").alias("state_doc"),
+            F.col("a.n_sh").alias("n_a"),
+            F.col("s.n_sh").alias("n_b"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    jac = inter.select("doc_id", _jaccard_from_counts())
+    return jac.filter(F.col("jaccard") >= threshold).select("doc_id")
+
+
+def incremental_corpus_clean(
+    batch_docs: DataFrame,
+    seen_hashes: DataFrame | None = None,
+    shingle_state: DataFrame | None = None,
+    eval_df: DataFrame | None = None,
+    lang: str = "en",
+    min_tokens: int = 10,
+    max_stopword_ratio: float = 0.8,
+    jaccard_threshold: float = 0.5,
+    contamination_threshold: float = 0.5,
+    contamination_n: int = 8,
+    ngram_n: int = 3,
+    broadcast_eval: bool = True,
+    near_dup: str = "exact",
+    bucket_state: DataFrame | None = None,
+    lsh_num_hashes: int = 12,
+    lsh_band_size: int = 2,
+    repetition_filter: bool = False,
+    paragraph_sep: str | None = None,
+    para_state: DataFrame | None = None,
+    span_tokens: int | None = None,
+    span_state: DataFrame | None = None,
+    embeddings_df: DataFrame | None = None,
+    srp_state: DataFrame | None = None,
+    semantic_threshold: float = 0.4,
+    semantic_n_planes: int = 8,
+    eval_bloom=None,
+    prune_thresholds: DataFrame | None = None,
+    line_filter: bool = False,
+    dsir_lr: list[int] | None = None,
+    dsir_threshold: float = 0.0,
+    dsir_normalize: bool = True,
+    dsir_salt: str = "",
+    jaccard_df_cap: int | None = None,
+) -> dict[str, DataFrame]:
+    """One batch through the corpus-clean spine: quality -> exact dedup
+    -> near-dup removal -> decontamination, against the given state.
+    Every state argument None is the batch operator (corpus_clean);
+    streaming_corpus_clean reads the state tables and calls this once
+    per micro-batch.
+
+    Core stages:
+
+    - quality: ``lang`` match, ``n_tokens >= min_tokens`` and
+      ``stopword_ratio <= max_stopword_ratio``; NULL text or lang fails
+      the gate. ``repetition_filter=True`` adds the Gopher n-gram
+      repetition rules (functions/text.gopher_repetition) and requires
+      ``min_tokens >= 10`` (every rule needs a 10-gram; the length
+      filter guarantees one). Both land in dropped_quality.
+    - exact: within the batch, the min doc_id per full text survives
+      (the batch and DuckDB-oracle rule); then texts whose xxhash64 is
+      in ``seen_hashes`` drop. The hash keys only that state, so a
+      within-batch hash collision can never drop a doc.
+    - near-dup, ``near_dup="exact"`` (default, the oracle tier): the
+      word-``ngram_n``-gram inverted-index Jaccard self-join over the
+      batch (dedup.ngram_jaccard_pairs, larger side of a pair drops)
+      plus a join of the batch index against ``shingle_state`` (batch
+      side drops — first arrival wins). ``jaccard_df_cap`` caps the
+      self-join's shingle document frequency (REQUIRED at corpus
+      scale: the exact form is quadratic on vocabulary-saturated
+      corpora, BASELINE.md §D); it changes which pairs qualify, so it
+      is rejected with ``shingle_state`` (the cross-batch join scores
+      uncapped sets) and with ``near_dup="lsh"``.
+    - near-dup, ``near_dup="lsh"``: MinHash band buckets generate
+      candidates within the batch and against ``bucket_state``
+      (dedup.incremental_lsh_candidates at ``lsh_num_hashes`` /
+      ``lsh_band_size``), then exact Jaccard verifies only the
+      candidates (dedup.jaccard_verify_on_index), so cost is bounded by
+      the candidate count, never sum(df^2). The drops are a subset of
+      the exact tier's.
+    - decontamination (``eval_df``): a survivor whose n-gram
+      containment of an eval doc reaches ``contamination_threshold``
+      (dedup.contamination_pairs at ``contamination_n``) drops last, so
+      dedup never masks a contamination hit. ``eval_bloom`` (a
+      dedup.ShingleBloom built over the SAME eval_df and n) routes the
+      batch through the map-side Bloom prefilter first: bit-identical
+      drops, and a static benchmark set is folded once for a stream's
+      lifetime. ``broadcast_eval`` passes through; leave it True only
+      for a benchmark-sized eval set.
+
+    Optional stages (all off by default):
+
+    - ``line_filter`` runs the RefinedWeb line-wise corrections first
+      (line_filter_split), booked as dropped_line_filter.
+    - ``dsir_lr`` is a stateless DSIR gate on the line-cleaned text: the
+      model is fit OFFLINE on a reference snapshot (a stream cannot see
+      the full raw distribution) and passed as
+      selection.collect_logratio's list; docs whose importance weight
+      (per gram when ``dsir_normalize``) falls below ``dsir_threshold``
+      drop, booked as dropped_dsir_gate. ``dsir_salt`` must equal the
+      salt of the fit: a mismatch scores differently-bucketed grams.
+    - ``paragraph_sep`` (e.g. ``"\\n"``) runs corpus-wide paragraph
+      dedup against ``para_state`` (paragraph_dedup_incremental), then
+      ``span_tokens`` runs C4-style duplicate-span removal against
+      ``span_state`` (span_dedup_incremental). Both rewrite the text
+      before quality scoring, so token counts see the deduped text; a
+      doc whose text empties out drops at the quality stage.
+    - ``prune_thresholds`` applies a PINNED per-source n_tokens cut
+      (quality_prune_thresholds over a corpus snapshot; per-batch
+      quantiles would drift with batch composition) after
+      decontamination, booked as dropped_quality_prune.
+    - ``embeddings_df`` (vec_id == doc_id) runs SemDeDup-style semantic
+      dedup last over the survivors (dedup.semantic_dedup_incremental
+      against ``srp_state``); docs without an embedding pass through.
+      ``semantic_n_planes`` is pinned for the state's lifetime.
+
+    Returns::
+
+        {"kept":            survivors (doc_id, lang, source, n_tokens),
+         "dropped_<stage>": (doc_id) per stage that ran — quality,
+                            exact, neardup, and when on line_filter,
+                            dsir_gate, contaminated, quality_prune,
+                            semantic,
+         "rewritten":       (doc_id, text) after the rewrite stages, for
+                            every doc that reached quality scoring,
+         "new_hashes", "new_shingles" [, "new_buckets", "new_paras",
+         "new_spans", "new_embeddings"]: DELTAS to append to each state}
+
+    The deltas are pure appends: novel hashes only, the shingle index
+    of EVERY exact-kept doc (near-dup losers stay valid pair sources for
+    later batches — the parity condition), the batch's band rows.
+    Nothing re-reads or re-aggregates the accumulated state; a replay of
+    the same batch yields empty kept and empty hash deltas. Append-only
+    bucket deltas assume ingest-once doc ids; for re-ingest with changed
+    text use incremental_lsh_candidates directly (latest-ingest-wins).
+    """
+    if near_dup not in ("exact", "lsh"):
+        raise ValueError(f"near_dup must be 'exact' or 'lsh', got {near_dup!r}")
+    if jaccard_df_cap is not None and (
+        near_dup == "lsh" or shingle_state is not None
+    ):
+        # the cap changes WHICH pairs qualify, so silently ignoring it
+        # would break the drops-are-what-you-ran contract
+        raise ValueError(
+            "jaccard_df_cap applies to the exact tier's within-batch "
+            "self-join only: the lsh tier's candidate verify is already "
+            "bounded, and the cross-batch join scores uncapped shingle "
+            "sets. Drop the cap, or use near_dup='exact' with no "
+            "shingle_state."
+        )
+    if repetition_filter and min_tokens < 10:
+        raise ValueError(
+            "repetition_filter requires min_tokens >= 10 (every "
+            "repetition rule needs a 10-gram, and the length filter "
+            "is what guarantees one)"
+        )
+
+    # Lazy localCheckpoint at every fan-out node: the returned frames
+    # are read by separate actions (a streaming sink writes each one,
+    # the pretraining accounting counts each one), so a frame with two
+    # or more consumers would otherwise re-run the whole chain above it
+    # once per action. Each checkpoint is batch-sized
+    # (MEMORY_AND_DISK), changes no rows, and is freed with the
+    # DataFrames. The shingle index is the one exception (below).
+    out: dict[str, DataFrame] = {}
+    if line_filter:
+        batch_docs, out["dropped_line_filter"] = line_filter_split(batch_docs)
+
+    if dsir_lr is not None:
+        from bigdata_cookbook_spark.operators.selection import (
+            dsir_score_expr,
+            gram_array_expr,
+        )
+
+        score = dsir_score_expr(F.col("text"), dsir_lr, salt=dsir_salt)
+        if dsir_normalize:
+            n = F.size(gram_array_expr(F.col("text")))
+            score = F.when(n > 0, score / n).otherwise(F.lit(0.0))
+        staged = batch_docs.withColumn(
+            "__dsir", F.coalesce(score >= dsir_threshold, F.lit(False))
+        ).localCheckpoint(eager=False)
+        out["dropped_dsir_gate"] = staged.filter(~F.col("__dsir")).select("doc_id")
+        batch_docs = staged.filter(F.col("__dsir")).drop("__dsir")
+
+    if paragraph_sep is not None:
+        pr = paragraph_dedup_incremental(batch_docs, para_state, sep=paragraph_sep)
+        batch_docs = join_rewritten_text(batch_docs, pr["rewritten"]).localCheckpoint(
+            eager=False
+        )
+        out["new_paras"] = pr["new_paras"]
+
+    if span_tokens is not None:
+        sp = span_dedup_incremental(batch_docs, span_state, span_tokens=span_tokens)
+        batch_docs = join_rewritten_text(batch_docs, sp["rewritten"])
+        out["new_spans"] = sp["new_spans"]
+
     feats = quality_exprs(F.col("text"))
-    scored = docs.select(
+    scored = batch_docs.select(
         "doc_id",
         "text",
         "lang",
         "source",
         feats["n_tokens"].alias("n_tokens"),
         feats["stopword_ratio"].alias("stopword_ratio"),
-    )
-    quality_ok = (
+    ).localCheckpoint(eager=False)
+    out["rewritten"] = scored.select("doc_id", "text")
+    quality_ok = F.coalesce(
         (F.col("lang") == lang)
         & (F.col("n_tokens") >= min_tokens)
-        & (F.col("stopword_ratio") <= max_stopword_ratio)
+        & (F.col("stopword_ratio") <= max_stopword_ratio),
+        F.lit(False),
     )
     passed = scored.filter(quality_ok)
     dropped_quality = scored.filter(~quality_ok).select("doc_id")
 
     if repetition_filter:
-        if min_tokens < 10:
-            raise ValueError(
-                "repetition_filter requires min_tokens >= 10 (every "
-                "repetition rule needs a 10-gram, and the length filter "
-                "is what guarantees one)"
-            )
         verdict = gopher_repetition(passed.select("doc_id", "text"))
+        rep_staged = passed.join(
+            verdict.select("doc_id", F.col("keep").alias("__rep")), "doc_id"
+        ).localCheckpoint(eager=False)
         dropped_quality = dropped_quality.unionByName(
-            verdict.filter(~F.col("keep")).select("doc_id")
+            rep_staged.filter(~F.col("__rep")).select("doc_id")
         )
-        passed = passed.join(
-            verdict.filter(F.col("keep")).select("doc_id"), "doc_id", "left_semi"
-        )
+        passed = rep_staged.filter(F.col("__rep")).drop("__rep")
+    out["dropped_quality"] = dropped_quality
 
-    # `passed` feeds the canon groupBy AND the keeper semi-join, and
-    # `exact_kept` feeds the near-dup tier's shingle index (twice, via
-    # the self-join) AND the final anti-join — without materialization
-    # the scan + quality battery + exact dedup re-execute once per
-    # consumer. Two lazy localCheckpoints truncate the lineage at both
-    # fan-out points. Storage trade at 100 TB: two materializations of the survivor
-    # corpus (MEMORY_AND_DISK); a production run that wants durability
-    # instead should stage the survivors through
-    # plans/checkpoint.stage_checkpoint — same pattern, parquet-backed.
-    passed = passed.localCheckpoint(eager=False)
-    canon = passed.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
-    exact_kept = passed.join(canon.select("doc_id"), "doc_id", "left_semi")
-    exact_kept = exact_kept.localCheckpoint(eager=False)
-    dropped_exact = passed.join(canon.select("doc_id"), "doc_id", "left_anti").select(
+    canon = passed.groupBy("text").agg(F.min("doc_id").alias("doc_id")).select(
+        "doc_id", F.xxhash64("text").alias("text_hash")
+    )
+    if seen_hashes is not None:
+        canon = canon.join(seen_hashes, "text_hash", "left_anti")
+    # text_hash is NULL exactly on the exact-dup losers
+    flagged = passed.join(canon, "doc_id", "left").localCheckpoint(eager=False)
+    exact_kept = flagged.filter(F.col("text_hash").isNotNull())
+    out["dropped_exact"] = flagged.filter(F.col("text_hash").isNull()).select(
         "doc_id"
     )
+    out["new_hashes"] = exact_kept.select("text_hash")
 
-    if near_dup not in ("exact", "lsh"):
-        raise ValueError(f"near_dup must be 'exact' or 'lsh', got {near_dup!r}")
-    if near_dup == "lsh" and jaccard_df_cap is not None:
-        # fail loud instead of silently scoring with uncapped shingle
-        # sets: the cap changes WHICH pairs qualify (capped Jaccard
-        # deliberately ignores boilerplate-only overlap), so accepting
-        # both would break the lsh-is-a-subset-of-what-you-ran contract;
-        # the lsh verify is already bounded by |candidates| and needs no
-        # cap
-        raise ValueError(
-            "jaccard_df_cap applies to the exact tier's inverted-index "
-            "self-join only; the lsh tier's candidate verify is already "
-            "bounded. Drop the cap or use near_dup='exact'."
-        )
+    # the shingle index is the largest frame (~|tokens| rows per doc)
+    # and a shuffle-free explode off the checkpointed exact_kept, so it
+    # is recomputed per consumer rather than stored
+    batch_idx = shingle_index(exact_kept, n=ngram_n)
+    out["new_shingles"] = batch_idx
     if near_dup == "lsh":
-        from bigdata_cookbook_spark.operators.dedup import (
-            jaccard_verify_pairs,
-            minhash_lsh_candidates,
+        lsh = incremental_lsh_candidates(
+            exact_kept.select("doc_id", "text"),
+            seen_buckets=bucket_state,
+            n=ngram_n,
+            num_hashes=lsh_num_hashes,
+            band_size=lsh_band_size,
         )
-
-        cand = minhash_lsh_candidates(
-            exact_kept, num_hashes=lsh_num_hashes, band_size=lsh_band_size
+        # candidates are least-id-first, so under ingest-once ordered
+        # ids doc_b is the batch side of a cross pair and the larger id
+        # within the batch — the loser either way; state docs only ever
+        # appear as the kept partner
+        cand = lsh["candidates"].join(
+            exact_kept.select(F.col("doc_id").alias("doc_b")), "doc_b", "left_semi"
         )
-        # Materialize the candidate list once (lazy localCheckpoint —
-        # same precedent as graph.connected_components): the pair list
-        # itself is SMALL (bounded by banding collisions) but its
-        # lineage is the full MinHash banding DAG over the corpus, and
-        # the verify stage references it from three places (the
-        # candidate-doc corpus prune + both join sides) while the
-        # accounting pass and the kept/dropped splits each re-trigger
-        # it per action. Without this, the banding DAG re-executes
-        # once per reference.
-        cand = cand.localCheckpoint(eager=False)
-        pairs = jaccard_verify_pairs(
-            exact_kept, cand, threshold=jaccard_threshold
+        idx = batch_idx
+        if shingle_state is not None:
+            idx = idx.unionByName(shingle_state)
+        losers = jaccard_verify_on_index(cand, idx, jaccard_threshold).select(
+            F.col("doc_b").alias("doc_id")
+        )
+        out["new_buckets"] = (
+            lsh["buckets"]
+            if bucket_state is None
+            else lsh["buckets"].join(bucket_state, ["doc_id"], "left_anti")
         )
     else:
-        pairs = ngram_jaccard_pairs(
-            exact_kept, threshold=jaccard_threshold, df_cap=jaccard_df_cap
-        )
-    near_losers = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-    kept = exact_kept.join(near_losers, "doc_id", "left_anti")
-    out = {
-        "dropped_quality": dropped_quality,
-        "dropped_exact": dropped_exact,
-        "dropped_neardup": near_losers,
-    }
-    if eval_df is not None:
-        from bigdata_cookbook_spark.operators.dedup import (
-            bloom_contamination,
-            contamination_pairs,
-        )
-
-        # the pre-decontamination survivor set, exposed so accounting
-        # callers (workflows.pretraining_pipeline) can persist it: the
-        # contamination drop count otherwise re-executes the whole
-        # quality -> exact -> near-dup lineage
-        out["pre_contamination_kept"] = kept
-        _contam = bloom_contamination if bloom_decontaminate else contamination_pairs
-        contaminated = (
-            _contam(
-                kept,
-                eval_df,
-                n=contamination_n,
-                threshold=contamination_threshold,
-                # decontamination must flag the training COPY of an eval
-                # doc too — never exempt a pair on id equality here
-                exclude_self=False,
-                broadcast_eval=broadcast_eval,
+        losers = ngram_jaccard_pairs(
+            exact_kept, n=ngram_n, threshold=jaccard_threshold, df_cap=jaccard_df_cap
+        ).select(F.col("doc_b").alias("doc_id"))
+        if shingle_state is not None:
+            losers = losers.unionByName(
+                _cross_batch_neardup(batch_idx, shingle_state, jaccard_threshold)
             )
-            .select(F.col("train_id").alias("doc_id"))
+    near_losers = losers.distinct().localCheckpoint(eager=False)
+    out["dropped_neardup"] = near_losers
+    kept = exact_kept.join(near_losers, "doc_id", "left_anti").localCheckpoint(
+        eager=False
+    )
+
+    if eval_df is not None:
+        contam_kw = dict(
+            n=contamination_n,
+            threshold=contamination_threshold,
+            # decontamination must flag the training COPY of an eval doc
+            # too — never exempt a pair on id equality here
+            exclude_self=False,
+            broadcast_eval=broadcast_eval,
+        )
+        if eval_bloom is not None:
+            raw = bloom_contamination(kept, eval_df, bloom=eval_bloom, **contam_kw)
+        else:
+            raw = contamination_pairs(kept, eval_df, **contam_kw)
+        contaminated = (
+            raw.select(F.col("train_id").alias("doc_id"))
             .distinct()
+            .localCheckpoint(eager=False)
         )
         kept = kept.join(contaminated, "doc_id", "left_anti")
         out["dropped_contaminated"] = contaminated
+    if prune_thresholds is not None:
+        pruned = quality_prune(
+            kept, "n_tokens", "source", thresholds=prune_thresholds
+        ).localCheckpoint(eager=False)
+        out["dropped_quality_prune"] = kept.join(
+            pruned.select("doc_id"), "doc_id", "left_anti"
+        ).select("doc_id")
+        kept = pruned
+    if embeddings_df is not None:
+        # only survivors with embedding coverage compete; uncovered docs
+        # pass through
+        surv_emb = embeddings_df.join(
+            kept.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
+        ).localCheckpoint(eager=False)
+        sem = semantic_dedup_incremental(
+            surv_emb, srp_state, threshold=semantic_threshold, n_planes=semantic_n_planes
+        )
+        dropped_semantic = (
+            sem["dropped"]
+            .select(F.col("vec_id").alias("doc_id"))
+            .localCheckpoint(eager=False)
+        )
+        kept = kept.join(dropped_semantic, "doc_id", "left_anti")
+        out["dropped_semantic"] = dropped_semantic
+        out["new_embeddings"] = sem["new_state"]
     out["kept"] = kept.select("doc_id", "lang", "source", "n_tokens")
     return out
 
@@ -920,17 +1160,16 @@ def join_rewritten_text(docs: DataFrame, rewritten: DataFrame) -> DataFrame:
     )
 
 
-def line_filter_split(
-    docs: DataFrame, stage: Callable[[DataFrame], DataFrame] | None = None
-) -> tuple[DataFrame, DataFrame]:
+def line_filter_split(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """RefinedWeb line-wise corrections as a pipeline stage: returns
     (kept, dropped) where kept is (doc_id, text, lang, source) carrying
     the line-cleaned text and dropped is the doc_ids whose kept text
-    fell under half the original (functions/text.line_filter_exprs).
+    fell under half the original (functions/text.line_filter_exprs), or
+    whose text is NULL.
 
     Both outputs read one staged (doc_id, clean, keep, lang, source)
-    frame; ``stage`` (e.g. a persist or localCheckpoint) is applied to
-    it so the line battery runs once for both.
+    frame under a lazy localCheckpoint, so the line battery runs once
+    for both.
     """
     from bigdata_cookbook_spark.functions.text import line_filter_exprs
 
@@ -938,12 +1177,10 @@ def line_filter_split(
     staged = docs.select(
         "doc_id",
         lf["text_clean"].alias("__clean"),
-        lf["doc_keep"].alias("__keep"),
+        F.coalesce(lf["doc_keep"], F.lit(False)).alias("__keep"),
         "lang",
         "source",
-    )
-    if stage is not None:
-        staged = stage(staged)
+    ).localCheckpoint(eager=False)
     kept = staged.filter(F.col("__keep")).select(
         "doc_id", F.col("__clean").alias("text"), "lang", "source"
     )

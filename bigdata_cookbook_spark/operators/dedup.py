@@ -71,6 +71,16 @@ def doc_shingles(
     )
 
 
+def _jaccard_from_counts():
+    """``jaccard`` = round(n_common / (n_a + n_b - n_common), 4): the
+    Jaccard of two shingle sets from their sizes and intersection count
+    (|A∪B| = |A| + |B| - |A∩B|), the one scoring rule of every
+    near-dup tier."""
+    return F.round(
+        F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 4
+    ).alias("jaccard")
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -86,45 +96,35 @@ def ngram_jaccard_pairs(
     At 100 TB, run after LSH banding (minhash_lsh_candidates) to bound the
     join — and set ``df_cap``.
 
-    ``df_cap`` (round-4 sf1 rehearsal finding): the self-join materializes
-    sum(df^2) rows over the shingle document frequencies, so on corpora
-    whose shingle vocabulary saturates (templated/boilerplate text — the
-    norm for web-scale dedup), df grows linearly with corpus size and the
-    join QUADRATICALLY: measured 2.8M join rows at 5k docs -> 249M at 50k
-    docs (89x for 10x data; 0.73s -> 28.4s). With ``df_cap=k``, shingles
-    occurring in more than k documents are dropped on BOTH sides before
-    the join — Jaccard is then computed over the capped shingle sets
-    (|A|,|B| too, so the score stays internally consistent): pairs whose
-    only overlap is ultra-common boilerplate count as non-duplicates,
-    which is the behavior production dedup wants from its stopword-shingle
-    guard, and the join bound becomes sum(min(df,k)^2) <= k * corpus
-    instances — linear in the corpus. The hot-shingle set (df > k) is the
-    Zipf head, at most instances/k entries, broadcast as a left-anti so
-    the doc_id partitioning of the shingle rows survives untouched. The
-    exact (df_cap=None) form stays the default and the oracle tier;
-    ``ngram_jaccard_capped`` oracles the capped form end-to-end.
-
-    Plan note for the capped form: the capped-shingle lineage is planned
-    once per self-join side (exchange reuse does not collapse subtrees
-    across the anti-join boundary), so shingling runs ~4x — still linear
-    and fully parallel, 2.0s at sf1 vs 28.4s exact. At corpus scale,
-    stage the capped shingle index once (persist(), or
-    plans/checkpoint.stage_checkpoint) and self-join the staged frame —
-    the same caller-owned-cache pattern as workflows.pretraining_pipeline.
-    Measured alternative (round 4): a cooccurrence-style group-expand
-    (repartition to shingle, window df count, collect doc lists <= cap,
-    in-array pair explode) computes shingles once but LOSES — 3.45s vs
-    1.57s at sf1 — because the per-shingle window sort over the exploded
-    rows costs more than the duplicated-but-parallel anti-join lineage.
+    ``df_cap``: the self-join materializes sum(df^2) rows over the
+    shingle document frequencies, so on corpora whose shingle vocabulary
+    saturates (templated/boilerplate text — the norm for web-scale
+    dedup), df grows linearly with corpus size and the join
+    QUADRATICALLY (2.8M join rows at 5k docs -> 249M at 50k docs). With
+    ``df_cap=k``, shingles occurring in more than k documents are
+    dropped on BOTH sides before the join — Jaccard is then computed
+    over the capped shingle sets (|A|,|B| too, so the score stays
+    internally consistent): pairs whose only overlap is ultra-common
+    boilerplate count as non-duplicates, which is the behavior
+    production dedup wants from its stopword-shingle guard, and the join
+    bound becomes sum(min(df,k)^2) <= k * corpus instances — linear in
+    the corpus. The hot-shingle set (df > k) is the Zipf head, at most
+    instances/k entries, broadcast as a left-anti so the doc_id
+    partitioning of the shingle rows survives untouched. The exact
+    (df_cap=None) form stays the default and the oracle tier;
+    ``ngram_jaccard_capped`` oracles the capped form end-to-end. A
+    cooccurrence-style group-expand (repartition to shingle, window df
+    count, collect doc lists <= cap, in-array pair explode) computes
+    shingles once but loses to this form: the per-shingle window sort
+    over the exploded rows costs more than the parallel anti-join.
     """
     from pyspark.sql import Window
 
     # join on xxhash64(shingle), not the shingle string: the equi-join
     # key drops from a ~25-byte UTF8 string to a fixed 8-byte long, which
-    # shrinks the self-join shuffle and speeds the hash probe (measured
-    # 1.00s -> 0.67s at sf0.1, identical pairs). A 64-bit collision
-    # between two DISTINCT shingles of co-bucketed docs would inflate
-    # n_common by 1; P < (distinct shingles)^2 / 2^64 ~ 1e-8 at sf0.1 and
+    # shrinks the self-join shuffle and speeds the hash probe. A 64-bit
+    # collision between two DISTINCT shingles of co-bucketed docs would
+    # inflate n_common by 1; P < (distinct shingles)^2 / 2^64 ~ 1e-8 at sf0.1 and
     # still negligible at the 100 TB tier per join partition. The DuckDB
     # oracle intersects the strings themselves — the hash is invisible in
     # results.
@@ -132,16 +132,11 @@ def ngram_jaccard_pairs(
         "doc_id", F.xxhash64("shingle").alias("shingle")
     )
     if df_cap is not None:
-        # round 11 (guide §3.3): the raw shingle-hash table feeds the
-        # hot-shingle build AND the anti-join's left side, so the
-        # tokenize+shingle+hash battery ran twice (the self-join sides
-        # above it already share one exchange via reuse). The table is
-        # NARROW — 16 bytes/shingle — so one lazy localCheckpoint is
-        # cheap at any scale and replaces the docstring's "stage the
-        # index yourself" advice for the capped tier. Measured
-        # 1.71 -> 0.89 s at sf1 (ngram_jaccard_capped, fresh DataFrame
-        # per rep, paired min-of-3). The exact (df_cap=None) oracle
-        # tier is untouched.
+        # the raw shingle-hash table feeds the hot-shingle build AND the
+        # anti-join's left side; it is NARROW (16 bytes/shingle), so
+        # one lazy localCheckpoint keeps the tokenize+shingle+hash
+        # battery from running twice at any scale. The exact
+        # (df_cap=None) oracle tier is untouched.
         sh = sh.localCheckpoint(eager=False)
         hot = (
             sh.groupBy("shingle")
@@ -168,13 +163,7 @@ def ngram_jaccard_pairs(
         )
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    jac = inter.select(
-        "doc_a",
-        "doc_b",
-        F.round(
-            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 4
-        ).alias("jaccard"),
-    )
+    jac = inter.select("doc_a", "doc_b", _jaccard_from_counts())
     return jac.filter(F.col("jaccard") >= threshold)
 
 
@@ -717,13 +706,7 @@ def jaccard_verify_on_index(
         .groupBy("doc_a", "doc_b", "n_a", "n_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    jac = inter.select(
-        "doc_a",
-        "doc_b",
-        F.round(
-            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 4
-        ).alias("jaccard"),
-    )
+    jac = inter.select("doc_a", "doc_b", _jaccard_from_counts())
     return jac.filter(F.col("jaccard") >= threshold)
 
 

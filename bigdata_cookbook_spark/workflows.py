@@ -324,23 +324,19 @@ def pretraining_pipeline(
     ``dropped_domain_blocklist``), then canonical-URL exact dedup keeps
     the best capture per URL (dedup.url_dedup_keep_best: longest text,
     tie lowest id; booked as ``dropped_url_dedup``); the URL column is
-    consumed by the stage and not carried further;
-    ``paragraph_dedup_sep`` (e.g. ``"\\n"``) rewrites
-    document text with corpus-wide paragraph dedup
-    (corpus.paragraph_dedup — the Dolma/CCNet boilerplate-footer pass)
-    BEFORE everything else: structural boilerplate is the coarsest
-    duplication, so removing it first keeps the span/token stages from
-    re-discovering the same footers window by window;
-    ``line_filter`` runs the RefinedWeb line-wise corrections
-    (functions/text.line_filter_exprs) right after HTML extraction and
-    BEFORE the dedup stages: kept docs carry the line-cleaned text,
-    docs whose kept text falls under half the original drop whole,
-    booked as ``dropped_line_filter``;
-    ``span_dedup_tokens`` rewrites document text
-    next with C4-style duplicate-span removal (corpus.span_dedup) —
-    C4's order, so later token counts see the deduped text;
-    ``repetition_filter`` adds the Gopher n-gram repetition rules to
-    the quality stage (corpus_clean passthrough); ``embeddings_df``
+    consumed by the stage and not carried further.
+    From HTML extraction to decontamination the pipeline is one no-state
+    call of the corpus-clean spine (corpus.incremental_corpus_clean),
+    whose docstring carries each stage's rule: ``line_filter`` runs the
+    RefinedWeb line-wise corrections right after HTML extraction
+    (booked as ``dropped_line_filter``); ``paragraph_dedup_sep`` (e.g.
+    ``"\\n"``) rewrites document text with corpus-wide paragraph dedup
+    (the Dolma/CCNet boilerplate-footer pass) before the span and token
+    stages, so they never re-discover the same footers window by
+    window; ``span_dedup_tokens`` rewrites it next with C4-style
+    duplicate-span removal, so later token counts see the deduped
+    text; ``repetition_filter`` adds the Gopher n-gram repetition rules
+    to the quality stage; ``embeddings_df``
     (id-aligned: its vec_id == doc_id) adds SemDeDup-style semantic
     near-dup removal (dedup.semantic_dedup at ``semantic_threshold``)
     after the text-level stages — text near-dups are cheaper to find
@@ -350,20 +346,19 @@ def pretraining_pipeline(
     by n_tokens (corpus.quality_prune — the FineWeb-style
     keep-the-best-X%-per-domain cut), applied after cleaning +
     decontamination and before the semantic stage, booked as
-    ``dropped_quality_prune``; ``bloom_decontaminate`` passes through
-    to corpus_clean — the decontamination drop set is bit-identical,
-    only the plan changes (map-side Bloom prefilter instead of the
-    full shingle join); ``near_dup`` passes through to corpus_clean —
-    ``"lsh"`` swaps the near-dup stage's inverted-index self-join for
-    the MinHash-banding + candidate-verify funnel (the batch twin of
-    the streaming pipeline's production tier; the drop set is a SUBSET
-    of the exact tier's, short only of banding recall — corpus_clean's
-    docstring carries the trade); ``dsir_target`` (a DataFrame with a ``text``
-    column) turns on DSIR importance resampling
-    (operators/selection.py) as the LAST drop stage — after dedup /
-    decontamination / semantic so the selector only ranks docs allowed
-    to train at all, before mixing so target shares apply to the
-    targeted pool: hashed-gram LMs fit on the target sample vs the
+    ``dropped_quality_prune``; ``bloom_decontaminate`` builds the eval
+    set's shingle Bloom filter and hands it to the spine — the
+    decontamination drop set is bit-identical, only the plan changes
+    (map-side Bloom prefilter instead of the full shingle join);
+    ``near_dup="lsh"`` swaps the near-dup stage's inverted-index
+    self-join for the MinHash-banding + candidate-verify funnel (the
+    drop set is a SUBSET of the exact tier's, short only of banding
+    recall — corpus_clean's docstring carries the trade);
+    ``dsir_target`` (a DataFrame with a ``text`` column) turns on DSIR
+    importance resampling (operators/selection.py) as the LAST drop
+    stage — after dedup / decontamination / semantic so the selector
+    only ranks docs allowed to train at all, before mixing so target
+    shares apply to the targeted pool: hashed-gram LMs fit on the target sample vs the
     surviving pool, keep the ``dsir_keep_k`` (required with
     ``dsir_target``) highest-weight docs, booked as ``dropped_dsir``.
     Selection is TakeOrdered over a slim (doc_id, score) projection —
@@ -375,8 +370,9 @@ def pretraining_pipeline(
     Returns {clean, mixed, training_set, accounting, stage_seconds}:
     ``stage_seconds`` (None when ``with_accounting=False``) maps each
     accounting stage to the wall seconds its drop count took, plus a
-    ``prefix_materialize`` row — the persisted shared prefixes (and
-    ``clean`` itself) are counted once, timed, BEFORE the per-stage
+    ``prefix_materialize`` row — the shared prefixes (the temporary
+    caches, and ``clean`` itself, whose count also fills the spine's
+    lazy checkpoints) are counted once, timed, BEFORE the per-stage
     loop, so each stage's number is its own marginal cost on warmed
     caches and is independent of acc_rows order (a first-counted stage
     would otherwise absorb the one-time prefix cost); the numbers do
@@ -388,8 +384,8 @@ def pretraining_pipeline(
     stream a reproducible permutation. With ``shard_bytes`` set it also
     carries ``shard_id``: byte-targeted output shards
     (sampling.pack_shards) in the training order (shuffle_key, doc_id),
-    sized from the text the model actually trains on (post-span-rewrite
-    when that stage is active) — ``write.partitionBy("shard_id")``
+    sized from the text the model actually trains on (the spine's
+    ``rewritten`` text) — ``write.partitionBy("shard_id")``
     realizes ~shard_bytes files; ``accounting`` (None when
     ``with_accounting=False``) is one row per pipeline stage with its
     drop count (the audit trail a production data pipeline is judged
@@ -406,26 +402,27 @@ def pretraining_pipeline(
     column clean already carries (length_curriculum_from_counts) — no
     join back to the text, no re-tokenization. Accounting materializes
     one count per stage; pass with_accounting=False to keep the whole
-    return lazy (counts skipped, nothing cached but ``clean``; the one
-    exception is a count-star over ``embeddings_df`` when the semantic
-    stage is on — it sizes the SRP plane count, and it scans only the
-    raw input frame, never the cleaning lineage).
+    return lazy: counts are skipped, the only cache is ``clean``'s
+    persist, and the spine's lazy localCheckpoints (one per fan-out
+    node) store their batch-sized blocks only when the caller's first
+    action runs through them. The jobs that run at construction time
+    are the Bloom build over ``eval_df`` (``bloom_decontaminate``), a
+    count-star over the raw ``embeddings_df`` that sizes the SRP plane
+    count (semantic stage), and the DSIR model fit over the surviving
+    pool (``dsir_target``).
     """
     from bigdata_cookbook_spark.operators.corpus import (
-        corpus_clean,
-        join_rewritten_text,
+        incremental_corpus_clean,
         length_curriculum_from_counts,
-        line_filter_split,
-        paragraph_dedup,
-        span_dedup,
     )
+    from bigdata_cookbook_spark.operators.dedup import build_shingle_bloom
     from bigdata_cookbook_spark.operators.sampling import domain_mix_sample, shuffle_key
+    from bigdata_cookbook_spark.sources.testdata import spread_for_cpu_bound
 
-    # bounded-lifetime caches for the accounting pass: every dropped_*
-    # count re-executes its stage lineage, so without these the span
-    # rewrite (a corpus-wide shuffle) and the pre-semantic kept set
-    # re-run once per counted stage. Released before returning —
-    # only ``clean``'s cache is handed to the caller.
+    # bounded-lifetime caches for the accounting pass over the stages
+    # outside the spine (URL, semantic, DSIR): every dropped_* count
+    # re-executes its stage lineage without them. Released before
+    # returning — only ``clean``'s cache is handed to the caller.
     temp_caches = []
 
     dropped_blocklist = None
@@ -475,61 +472,31 @@ def pretraining_pipeline(
         # keys on). A rewrite, not a drop: nothing to book.
         docs = docs.withColumn("text", html_to_text_expr(F.col("text")))
 
-    dropped_line = None
-    if line_filter:
-        def _hold(df):
-            df = df.persist()
-            temp_caches.append(df)
-            return df
-
-        # RefinedWeb order: line-wise corrections run on the extracted
-        # text BEFORE the dedup stages, so boilerplate lines never seed
-        # paragraph/span/near-dup matches. Both a rewrite (kept docs
-        # carry the cleaned text) and a drop (booked as
-        # dropped_line_filter).
-        docs, dropped_line = line_filter_split(
-            docs, _hold if with_accounting else None
-        )
-
-    if paragraph_dedup_sep is not None:
-        docs = join_rewritten_text(
-            docs, paragraph_dedup(docs, sep=paragraph_dedup_sep)
-        )
-        if with_accounting:
-            docs = docs.persist()
-            temp_caches.append(docs)
-
-    if span_dedup_tokens is not None:
-        docs = join_rewritten_text(
-            docs, span_dedup(docs, span_tokens=span_dedup_tokens)
-        )
-        if with_accounting:
-            docs = docs.persist()
-            temp_caches.append(docs)
-
-    # jaccard_df_cap: REQUIRED at corpus scale (quadratic exact form —
-    # BASELINE.md §D); default None keeps the oracle-tier semantics
-    stages = corpus_clean(
-        docs,
+    # the corpus-clean spine, no state: [line filter ->] [paragraph
+    # dedup ->] [span dedup ->] quality -> exact -> near-dup [->
+    # decontamination]; its lazy checkpoints keep each accounting count
+    # from re-running the stages above it
+    stages = incremental_corpus_clean(
+        spread_for_cpu_bound(docs),
+        eval_df=eval_df,
         lang=lang,
         min_tokens=min_tokens,
-        eval_df=eval_df,
         jaccard_df_cap=jaccard_df_cap,
         repetition_filter=repetition_filter,
-        bloom_decontaminate=bloom_decontaminate,
         near_dup=near_dup,
+        eval_bloom=(
+            build_shingle_bloom(eval_df)
+            if bloom_decontaminate and eval_df is not None
+            else None
+        ),
+        line_filter=line_filter,
+        paragraph_sep=paragraph_dedup_sep,
+        span_tokens=span_dedup_tokens,
     )
     clean = stages["kept"]
-    if with_accounting and eval_df is not None:
-        # persist the pre-decontamination survivor set: the
-        # decontamination branch (Bloom probe or exact join) and every
-        # consumer of ``clean`` otherwise re-execute the full quality ->
-        # exact -> near-dup lineage per action. At the sf10 capstone the
-        # contamination stage's attributed wall was 298.5 s of which
-        # ~90% was this uncached prefix re-run, not contamination work
-        # (round-10 finding; the Bloom prefilter itself was already on).
-        pre_contam = stages["pre_contamination_kept"].persist()
-        temp_caches.append(pre_contam)
+    # (doc_id, text) as the model trains on it: the rewrite stages'
+    # output, read by the DSIR pool and the shard sizer
+    docs = stages["rewritten"]
 
     dropped_prune = None
     if quality_prune_frac is not None:
@@ -541,9 +508,8 @@ def pretraining_pipeline(
         # stage lineage (paragraph/span rewrites, bloom prefilter,
         # decontamination). A cache would keep the full logical plan,
         # whose tree STRING alone blows the driver heap at
-        # explain/event-log time once every stage is on (found by the
-        # all-stages-on example); checkpointing truncates the plan —
-        # the same move connected_components makes per fixpoint round.
+        # explain/event-log time once every stage is on; checkpointing
+        # truncates the plan.
         # eager only under accounting (which runs actions anyway); the
         # lazy path truncates at its single action, keeping the
         # one-action contract below.
@@ -577,10 +543,8 @@ def pretraining_pipeline(
             # semantic_dedup self-joins its input, so an uncached
             # surv_emb executes the whole upstream cleaning lineage
             # once per join side per action — ruinous across the
-            # accounting counts (measured 142s -> 9s on the sf0.001
-            # example). The lazy with_accounting=False path performs
-            # one action total and keeps the documented
-            # nothing-cached-but-clean contract.
+            # accounting counts. The lazy with_accounting=False path
+            # performs one action total and caches nothing here.
             surv_emb = surv_emb.persist()
             temp_caches.append(surv_emb)
         # plane count sized from the RAW embeddings frame (one cheap
@@ -621,8 +585,7 @@ def pretraining_pipeline(
             dsir_topk,
         )
 
-        # score the SURVIVING pool's current text (docs carries the
-        # line-filtered / span-rewritten form when those stages are on)
+        # score the SURVIVING pool's rewritten text
         pool = docs.join(clean.select("doc_id"), "doc_id", "left_semi")
         if with_accounting:
             # the fit collects two aggregates over pool and the scoring
@@ -663,9 +626,9 @@ def pretraining_pipeline(
     if shard_bytes is not None:
         from bigdata_cookbook_spark.operators.sampling import pack_shards
 
-        # bytes of the text the model trains on: ``docs`` is the
-        # span-rewritten frame when that stage is active. Slim join —
-        # only (doc_id, bytes) enters the prefix-sum shuffles.
+        # bytes of the text the model trains on (the rewritten text).
+        # Slim join — only (doc_id, bytes) enters the prefix-sum
+        # shuffles.
         sized = training_set.join(
             docs.select("doc_id", F.octet_length("text").alias("__bytes")),
             "doc_id",
@@ -678,37 +641,27 @@ def pretraining_pipeline(
     if with_accounting:
         spark = docs.sparkSession
         acc_rows = [
+            ("dropped_domain_blocklist", dropped_blocklist),
+            ("dropped_url_dedup", dropped_url),
+            ("dropped_line_filter", stages.get("dropped_line_filter")),
             ("dropped_quality", stages["dropped_quality"]),
             ("dropped_exact", stages["dropped_exact"]),
             ("dropped_neardup", stages["dropped_neardup"]),
+            ("dropped_quality_prune", dropped_prune),
+            ("dropped_semantic", dropped_semantic),
+            ("dropped_dsir", dropped_dsir),
+            ("dropped_contaminated", stages.get("dropped_contaminated")),
         ]
-        if dropped_line is not None:
-            acc_rows.insert(0, ("dropped_line_filter", dropped_line))
-        if dropped_url is not None:
-            acc_rows.insert(0, ("dropped_url_dedup", dropped_url))
-        if dropped_blocklist is not None:
-            acc_rows.insert(0, ("dropped_domain_blocklist", dropped_blocklist))
-        if dropped_prune is not None:
-            acc_rows.append(("dropped_quality_prune", dropped_prune))
-        if dropped_semantic is not None:
-            acc_rows.append(("dropped_semantic", dropped_semantic))
-        if dropped_dsir is not None:
-            acc_rows.append(("dropped_dsir", dropped_dsir))
-        if eval_df is not None:
-            acc_rows.append(("dropped_contaminated", stages["dropped_contaminated"]))
+        acc_rows = [(name, dfx) for name, dfx in acc_rows if dfx is not None]
         # per-stage wall attribution rides along with the accounting
-        # counts (round-8 VERDICT item 6): each drop count is the first
-        # action over that stage's lineage (given the prefix caches),
-        # so its wall time IS the stage's incremental cost. Stages
-        # share persisted prefixes, so the seconds measure marginal
-        # work and do not sum to the end-to-end wall. The shared
-        # prefixes are MATERIALIZED before the timed loop (the
-        # ``prefix_materialize`` row below): without that, whichever
-        # count happened to run first absorbed the one-time prefix
-        # cost, making each stage's number order-dependent (round-9
-        # ADVICE) — with it, re-ordering acc_rows no longer moves any
-        # stage's seconds, and each number is the stage's own marginal
-        # cost on warmed caches.
+        # counts: each drop count is the first action over that stage's
+        # own lineage, so its wall time is the stage's marginal cost.
+        # The shared prefixes (temporary caches, and the spine's lazy
+        # checkpoints filled by the clean count) are materialized
+        # before the timed loop, in the ``prefix_materialize`` row, so
+        # no stage absorbs the one-time prefix cost and re-ordering
+        # acc_rows moves no stage's seconds. The numbers do not sum to
+        # the end-to-end wall.
         import time as _time
 
         stage_seconds = {}

@@ -209,17 +209,30 @@ def test_jaccard_verify_pairs_immune_to_duplicate_candidates(spark):
 
 
 def test_corpus_clean_rejects_df_cap_with_lsh(spark, sf_dir):
-    """jaccard_df_cap shapes WHICH pairs qualify on the exact tier;
-    silently ignoring it under near_dup='lsh' would break the
-    subset-of-what-you-ran contract — the combination fails loud."""
+    """jaccard_df_cap shapes WHICH pairs qualify on the exact tier's
+    within-batch self-join; silently ignoring it under near_dup='lsh',
+    or next to a shingle_state whose cross-batch join scores uncapped
+    sets, would break the drops-are-what-you-ran contract — every such
+    combination fails loud."""
     import pytest as _pytest
 
-    from bigdata_cookbook_spark.operators.corpus import corpus_clean
+    from bigdata_cookbook_spark.operators.corpus import (
+        corpus_clean,
+        incremental_corpus_clean,
+    )
     from bigdata_cookbook_spark.sources.testdata import load_table
+    from bigdata_cookbook_spark.streaming.pipeline import streaming_corpus_clean
 
     docs = load_table(spark, sf_dir, "documents")
     with _pytest.raises(ValueError, match="jaccard_df_cap"):
         corpus_clean(docs, near_dup="lsh", jaccard_df_cap=20)
+    state = incremental_corpus_clean(docs)["new_shingles"]
+    with _pytest.raises(ValueError, match="jaccard_df_cap"):
+        incremental_corpus_clean(docs, shingle_state=state, jaccard_df_cap=20)
+    # the streaming tier rejects it before the stream starts, not at the
+    # second micro-batch
+    with _pytest.raises(ValueError, match="jaccard_df_cap"):
+        streaming_corpus_clean(docs, "state", "out", "ckpt", jaccard_df_cap=20)
 
 
 def test_corpus_clean_rejects_unknown_near_dup_tier(spark, sf_dir):

@@ -961,3 +961,51 @@ def test_incremental_dsir_gate_respects_salt(spark, docs):
         planted, dsir_lr=lr_salted, dsir_threshold=0.0
     )
     assert _ids(r_mismatch["kept"]) != _ids(r_plain["kept"])
+
+
+def test_null_text_and_lang_rows_are_booked(spark):
+    """A NULL-text, a NULL-lang and an empty-text document each land in
+    exactly one output bucket — batch, single incremental batch with the
+    line filter on, and two-batch ingest alike. NULL fails the quality
+    gate (and the line filter's keep rule) instead of vanishing from
+    both sides of its split."""
+    prose = (
+        "the committee said that the company would report its results "
+        "for the quarter on monday and that the outlook for the year "
+        "was stable with demand in the core markets holding up well"
+    )
+    other = (
+        "a separate filing showed the bank raised its dividend after a "
+        "strong year for lending and the board approved a new buyback "
+        "plan that will run through the end of next year"
+    )
+    rows = [
+        (1, prose, "en", "news"),
+        (2, None, "en", "news"),
+        (3, other, None, "filings"),
+        (4, "", "en", "news"),
+        (5, prose, "en", "filings"),
+        (6, other, "en", "filings"),
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id bigint, text string, lang string, source string"
+    )
+    ids = [r[0] for r in rows]
+
+    def booked(*results):
+        got = []
+        for res in results:
+            for key, frame in res.items():
+                if key == "kept" or key.startswith("dropped_"):
+                    got += [r.doc_id for r in frame.select("doc_id").collect()]
+        return sorted(got)
+
+    assert booked(corpus_clean(df)) == ids
+    assert booked(incremental_corpus_clean(df, line_filter=True)) == ids
+    r1 = incremental_corpus_clean(df.filter(F.col("doc_id") <= 3))
+    r2 = incremental_corpus_clean(
+        df.filter(F.col("doc_id") > 3),
+        seen_hashes=r1["new_hashes"],
+        shingle_state=r1["new_shingles"],
+    )
+    assert booked(r1, r2) == ids

@@ -1,14 +1,15 @@
 """Measure the LSH near-dup tier's recall against the exact tier.
 
-The r10 corpus_clean(near_dup="lsh") funnel (MinHash band candidates ->
+The corpus_clean(near_dup="lsh") funnel (MinHash band candidates ->
 exact Jaccard verify) is pytest-pinned to produce a SUBSET of the exact
 tier's drops (no false drops), but the RECALL — the fraction of the
 exact tier's qualifying pairs / dropped docs the banding finds — is the
-one number a user choosing the production tier needs (r10 VERDICT item
-4). This tool measures it on the real corpus at a given SF.
+one number a user choosing the production tier needs. This tool
+measures it on the real corpus at a given SF.
 
-Method: replicate corpus_clean's pre-near-dup prefix (quality gate +
-exact dedup) so both tiers score the same input, then
+Method: both tiers score the input the near-dup stage actually sees —
+the docs in corpus_clean(docs)'s kept ∪ dropped_neardup (quality gate
+and exact dedup at the defaults already applied) — then
 
   exact:  ngram_jaccard_pairs(threshold=min(thresholds))  [scored pairs]
   lsh:    minhash_lsh_candidates(num_hashes, band_size)
@@ -52,32 +53,23 @@ def main() -> None:
     num_hashes = int(sys.argv[2]) if len(sys.argv) > 2 else 12
     band_size = int(sys.argv[3]) if len(sys.argv) > 3 else 2
 
+    from bigdata_cookbook_spark.operators.corpus import corpus_clean
     from bigdata_cookbook_spark.operators.dedup import (
         jaccard_verify_pairs,
         minhash_lsh_candidates,
         ngram_jaccard_pairs,
     )
-    from bigdata_cookbook_spark.functions.text import quality_exprs
     from bigdata_cookbook_spark.session import get_spark
     from bigdata_cookbook_spark.sources.testdata import load_table
 
     spark = get_spark("lsh-recall")
     docs = load_table(spark, sf_dir, "documents")
 
-    # corpus_clean's pre-near-dup prefix (operators/corpus.py:102-144):
-    # quality gate at the defaults, then exact-text canonical dedup —
-    # the LSH tier must be scored on the input it actually sees
-    feats = quality_exprs(F.col("text"))
-    passed = docs.select(
-        "doc_id", "text", "lang", feats["n_tokens"].alias("n_tokens"),
-        feats["stopword_ratio"].alias("stopword_ratio"),
-    ).filter(
-        (F.col("lang") == "en")
-        & (F.col("n_tokens") >= 10)
-        & (F.col("stopword_ratio") <= 0.8)
-    )
-    canon = passed.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
-    exact_kept = passed.join(canon.select("doc_id"), "doc_id", "left_semi").cache()
+    # the near-dup stage's input: every doc that survived quality and
+    # exact dedup, whether or not it was later dropped as a near-dup
+    spine = corpus_clean(docs)
+    ids = spine["kept"].select("doc_id").unionByName(spine["dropped_neardup"])
+    exact_kept = docs.join(ids, "doc_id", "left_semi").cache()
     n_docs = exact_kept.count()
 
     t_min = min(THRESHOLDS)
@@ -90,10 +82,10 @@ def main() -> None:
     cand = minhash_lsh_candidates(
         exact_kept, num_hashes=num_hashes, band_size=band_size
     )
-    # materialize the pair list once, exactly as corpus_clean's lsh
-    # tier does — without this the banding DAG re-executes through the
-    # verify stage's three references and lsh_tier_sec overstates the
-    # production tier's cost (recall values are unaffected either way)
+    # materialize the pair list once — without this the banding DAG
+    # re-executes through the verify stage's three references and
+    # lsh_tier_sec overstates the tier's cost (recall values are
+    # unaffected either way)
     cand = cand.localCheckpoint(eager=False)
     lsh_pairs = jaccard_verify_pairs(exact_kept, cand, threshold=t_min).cache()
     n_lsh = lsh_pairs.count()
